@@ -5597,7 +5597,7 @@ object SparkEntry {
     // single-query recall@10 swings 0.5-1.0 across data
     // regenerations, while the 20-query mean measured 0.795-0.83 on
     // four corpora (σ_mean ≈ 0.03, so ≥ 0.7 is a >3σ-stable gate;
-    // `tools/ProbeIvfRecall`). IVF never fabricates distances —
+    // SURVEY.md §8, round r06). IVF never fabricates distances —
     // probed candidates carry exact L2 — so approximate results are a
     // subset of the corpus ranking and recall is the one quality
     // dial. The oracle recomputes the panel size and query 0's exact
@@ -6221,7 +6221,7 @@ object SparkEntry {
     * verify, tokenizer encodes — expensive narrow work ABOVE the last
     * exchange) that is a ~30-50% tax, measured r17: dedup_edit_verified
     * 15.6→8.2s, f7_conclusion_extract 7.3→4.2s, mm_resize_real
-    * 3.8→1.6s (ProfileSortTax, steady-state pairs).
+    * 3.8→1.6s (steady-state pairs, OPTIMIZATION_r17.md Change 2).
     *
     * Fix (guide §3.3 "materialising an intermediate truncates the
     * plan"): rebuild `<subtree>.orderBy(k)` as

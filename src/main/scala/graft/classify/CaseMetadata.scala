@@ -49,12 +49,14 @@ object CaseMetadata {
     * O(n) while matching texts take the identical regex path: results
     * are bit-identical (pinned by CaseMetadataSpec's guard property
     * test and the s2/ingest oracle hashes, whose DuckDB side still
-    * runs the unguarded pattern).
+    * runs the unguarded pattern). NULL text gives NULL, as the
+    * unguarded extract does: the guard is NULL then, so neither branch
+    * fires.
     */
   def partiesExtract(text: Column, group: Int): Column = {
     val low = lower(text)
     when(low.contains("vs") || low.contains("v.") || low.contains("versus"),
-      regexp_extract(text, partiesPattern, group)).otherwise(lit(""))
+      regexp_extract(text, partiesPattern, group)).when(text.isNotNull, lit(""))
   }
 
   def caseNumber(text: Column): Column =

@@ -48,19 +48,3 @@ case object NoFallback extends DecisionFallback {
     lit(DecisionRules.Invalid)
   override def isNoop: Boolean = true
 }
-
-/** Placeholder for the reference's remote GPT-4o client (model
-  * `gpt-4o`, temperature 0.3, max_tokens 10, system prompt built from
-  * the C3 document context — `extract_and_embed_v2.py:283-291`). Kept
-  * as an explicit boundary like [[graft.embed.RemoteEmbedder]]: the
-  * external model is non-deterministic and unavailable offline, so it
-  * is excluded from the correctness surface by contract (SURVEY §2 F8).
-  * A real implementation must batch prompts per partition, never one
-  * RPC per row.
-  */
-final case class RemoteDecisionFallback(model: String = "gpt-4o")
-    extends DecisionFallback {
-  def decide(conclusion: Column, docContext: Column): Column =
-    throw new UnsupportedOperationException(
-      "remote LLM fallback unavailable offline; use NoFallback or a local rule")
-}

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.oracle.Sql
 import graft.text.TextAnalysis
 
 /** Deduplication operators for training-data pipelines — the core
@@ -163,16 +162,6 @@ object Dedup {
     */
   def minhashSignatureFromHashes(sh: Column): Column =
     MinHashKernel.signatureFromHashes(sh, perms.map(_._1), perms.map(_._2))
-
-  /** LSH band keys: one 64-bit key per band over its signature slice.
-    * Rows with any equal band key become candidate pairs.
-    */
-  def bandKeys(sig: Column): Column =
-    array((0 until NumBands).map { bnd =>
-      xxhash64(lit(bnd),
-        array_join(transform(slice(sig, bnd * RowsPerBand + 1, RowsPerBand),
-          v => v.cast("string")), "_"))
-    }: _*)
 
   /** Candidate near-duplicate pairs via LSH banding, verified with
     * exact Jaccard over the shingle sets. Plan shape: narrow signature

@@ -49,15 +49,3 @@ final case class DeterministicEmbedder(dim: Int = 64, seed: Long = 42L) extends 
     }: _*)
   }
 }
-
-/** Placeholder for the reference's remote ada-002 client. Kept as an
-  * explicit boundary: a real implementation must batch requests per
-  * partition (mapPartitions over an iterator of chunks), never one RPC
-  * per row like the reference. Unavailable in this offline harness.
-  */
-final case class RemoteEmbedder(model: String = "text-embedding-ada-002") extends Embedder {
-  def dim: Int = 1536
-  def embed(text: Column): Column =
-    throw new UnsupportedOperationException(
-      "remote embedding service unavailable offline; use DeterministicEmbedder")
-}

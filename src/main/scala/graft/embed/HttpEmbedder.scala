@@ -2,7 +2,6 @@ package graft.embed
 
 import java.io.{ByteArrayOutputStream, InputStream}
 import java.net.{HttpURLConnection, URI}
-import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.ObjectMapper
 

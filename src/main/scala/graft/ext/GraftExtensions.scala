@@ -106,7 +106,7 @@ object GraftFunctions {
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach { case (name, usage, builder) =>
+    GraftFunctions.all.foreach { case (name, _, builder) =>
       e.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.ext.GraftFunctions", null, name), builder))
     }

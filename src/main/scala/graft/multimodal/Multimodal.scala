@@ -1,7 +1,6 @@
 package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Multimodal columns for training-data pipelines: image/audio/video
   * travel as opaque `binary` columns with typed metadata, processed

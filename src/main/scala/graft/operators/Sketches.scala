@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.oracle.Sql
-
 /** Cross-engine DETERMINISTIC cardinality/frequency sketches
   * (HyperLogLog — Flajolet, Fusy, Gandouet & Meunier 2007; count–min
   * — Cormode & Muthukrishnan 2005) — the

@@ -3,7 +3,6 @@ package graft.search
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Maximal-marginal-relevance re-ranking (Carbonell & Goldstein 1998)
   * — the diversity pass a retrieval serving layer runs AFTER the

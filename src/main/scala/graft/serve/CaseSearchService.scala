@@ -4,7 +4,8 @@ import java.io.InputStream
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutorService, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -77,22 +78,35 @@ final class CaseSearchService(spark: SparkSession, root: String,
   import CaseSearchService._
 
   private var server: HttpServer = _
+  private var requests: ExecutorService = _
 
   /** Bound port after [[start]]. */
   def port: Int = server.getAddress.getPort
 
+  /** Request threads are named `graft-serve-<port>-<n>`. */
   def start(requestedPort: Int = 0): Int = synchronized {
     require(server == null, "already started")
     Files.createDirectories(Paths.get(root))
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", requestedPort), 0)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    requests = Executors.newFixedThreadPool(RequestThreads, requestThreadFactory(port))
+    server.setExecutor(requests)
     server.start()
     port
   }
 
+  /** Stops the listener, then the request pool: a request already
+    * running gets [[StopTimeoutSeconds]] to finish before it is
+    * interrupted, so an embedding JVM can exit after `stop()`.
+    */
   def stop(): Unit = synchronized {
-    if (server != null) { server.stop(0); server = null }
+    if (server != null) {
+      server.stop(0); server = null
+      requests.shutdown()
+      if (!requests.awaitTermination(StopTimeoutSeconds, TimeUnit.SECONDS))
+        requests.shutdownNow()
+      requests = null
+    }
   }
 
   // ------------------------------------------------------------------ //
@@ -461,6 +475,14 @@ object CaseSearchService {
 
   /** Default collection name — `extract_and_embed.py:164`. */
   val DefaultCollection = "case_files"
+
+  private val RequestThreads = 4
+  private val StopTimeoutSeconds = 10L
+
+  private def requestThreadFactory(port: Int): ThreadFactory = {
+    val n = new AtomicInteger()
+    (r: Runnable) => new Thread(r, s"graft-serve-$port-${n.incrementAndGet()}")
+  }
 
   /** `secure_filename` analog: strip any path components. */
   private[serve] def baseName(name: String): String = {

@@ -1,9 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.types.StructType
 
 /** Interchange-format round trips — JSONL (the de-facto LLM-corpus
   * wire format: one JSON object per line, splittable, appendable) and
@@ -52,11 +49,4 @@ object Formats {
     df.write.mode(SaveMode.Overwrite).orc(p)
     df.sparkSession.read.schema(df.schema).orc(p)
   }
-
-  /** Read JSONL from `path` under an explicit schema — the plain
-    * ingest entry for corpora delivered as JSONL shards.
-    */
-  def readJsonl(spark: org.apache.spark.sql.SparkSession, path: String,
-                schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
 }

@@ -57,7 +57,7 @@ object PdfFixture {
     * handles them, `/root/reference/extract_and_search.py:40-47`).
     */
   private def buildPdf(pages: Seq[(String, Boolean)],
-                       objStm: Boolean = false): Array[Byte] = {
+                       objStm: Boolean): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
     val n = pages.length

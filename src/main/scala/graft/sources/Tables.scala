@@ -74,7 +74,8 @@ object Tables {
     loadParallel(spark, dir, "embeddings")
 
   private val MinRowsPerTask = 64L
-  private final case class ScanMeta(rows: Long, rowGroups: Int)
+  private final case class ScanMeta(stamp: Seq[(String, Long, Long)],
+                                    rows: Long, rowGroups: Int)
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[String, ScanMeta]()
 
@@ -85,26 +86,31 @@ object Tables {
     val meta = scanMeta(spark, path)
     val width = math.min(target.toLong,
       math.max(1L, meta.rows / MinRowsPerTask)).toInt
-    if (meta.rowGroups >= width) df else df.repartition(width)
+    if (width <= 1 || meta.rowGroups >= width) df else df.repartition(width)
   }
 
   /** Footer metadata (rows + row-group count) for a parquet file or a
-    * directory of part files, cached by (path, mtime, length) — a few
-    * KB of footer per table, read once per fixture dir, never the
-    * data.
+    * directory of part files — a few KB of footer per table, read once
+    * per fixture dir, never the data. Cached per path and re-read when
+    * any part file's (name, mtime, length) changes: a directory's own
+    * mtime stays put when a part file is overwritten in place.
     */
   private def scanMeta(spark: SparkSession, path: String): ScanMeta = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = hp.getFileSystem(conf)
     val st = fs.getFileStatus(hp)
-    val key = s"${fs.getUri}$path#${st.getModificationTime}#${st.getLen}"
-    metaCache.computeIfAbsent(key, _ => {
-      val files =
-        if (st.isDirectory)
-          fs.listStatus(hp).toSeq.filter(f => f.isFile &&
-            f.getPath.getName.endsWith(".parquet"))
-        else Seq(st)
+    val files =
+      if (st.isDirectory)
+        fs.listStatus(hp).toSeq.filter(f => f.isFile &&
+          f.getPath.getName.endsWith(".parquet"))
+      else Seq(st)
+    val stamp = files.map(f =>
+      (f.getPath.getName, f.getModificationTime, f.getLen)).sortBy(_._1)
+    val key = s"${fs.getUri}$path"
+    val cached = metaCache.get(key)
+    if (cached != null && cached.stamp == stamp) cached
+    else {
       var rows = 0L
       var rgs = 0
       files.foreach { f =>
@@ -116,8 +122,10 @@ object Tables {
           rows += r.getRecordCount
         } finally r.close()
       }
-      ScanMeta(rows, rgs)
-    })
+      val meta = ScanMeta(stamp, rows, rgs)
+      metaCache.put(key, meta)
+      meta
+    }
   }
 
   def documents(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "documents")

@@ -199,8 +199,8 @@ private[streaming] object MaintainedScreen {
     * 512, NOT arbitrary: Spark folds the pushed values with
     * `reduceLeft(FilterApi.or)` — a LINEAR predicate chain whose
     * build/evaluation recursion depth equals the value count.
-    * `tools.InPushProbe` measured the cliff on this JVM (1 MB task
-    * stacks): 1024 values fine, 2048 = StackOverflowError inside the
+    * Measured on this JVM (1 MB task stacks; SURVEY.md §8, r14
+    * notes): 1024 values fine, 2048 = StackOverflowError inside the
     * parquet reader — which first shipped as a 4096 raise and killed
     * `streaming_clip_self` at sf0.1 mid-scale-run. 512 keeps a 4×
     * margin; sets past the threshold still filter through the

@@ -255,12 +255,4 @@ object MaintenanceLease {
     if (lease.held && fs.exists(new Path(lease.dir)) &&
         readLease(fs, lease.dir).exists(_._1 == holderId))
       fs.delete(leasePath(lease.dir), false)
-
-  /** Bracket `op` with acquire/release; validation stays the op's job
-    * (it knows where its swaps are).
-    */
-  def withLease[A](fs: FileSystem, dir: String)(op: Lease => A): A = {
-    val lease = acquire(fs, dir)
-    try op(lease) finally release(fs, lease)
-  }
 }

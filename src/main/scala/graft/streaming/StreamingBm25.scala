@@ -73,14 +73,6 @@ object StreamingBm25 {
         s"StreamingBm25 commit: rename $src -> $dst returned false; " +
         "failing so the operation is retried")
 
-  /** Data files of the serving table dir (top level only — the
-    * protocol dirs live under `__…` subdirectories).
-    */
-  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        root: Path): Seq[String] =
-    fs.listStatus(root).toSeq.filter(_.isFile).map(_.getPath.getName)
-      .filter(_.startsWith("part-"))
-
   /** Roll a crashed [[compact]] forward. The compact manifest only
     * lands AFTER staging completed, so its presence means every
     * compacted file exists (in the stage dir or already moved):

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Multi-executor smoke validation — `local-cluster[2,8,4096]`.
   *
@@ -96,17 +96,12 @@ object ClusterSmoke {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,8,4096]")
+    val spark = GraftSession.builder("local-cluster[2,8,4096]", 16)
       .appName("graft-cluster-smoke")
       .config("spark.executor.memory", "3g")
       .config("spark.executor.extraClassPath",
         System.getProperty("java.class.path"))
       .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

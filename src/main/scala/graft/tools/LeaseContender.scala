@@ -40,11 +40,8 @@ object LeaseContender {
             s"held=${lease.held}")
         case "compact" =>
           val buckets = if (args.length > 2) args(2).toInt else 4
-          val spark = org.apache.spark.sql.SparkSession.builder()
-            .master("local[2]")
+          val spark = graft.GraftSession.builder("local[2]", 4)
             .appName("graft-lease-contender")
-            .config("spark.sql.shuffle.partitions", "4")
-            .config("spark.ui.enabled", "false")
             .getOrCreate()
           spark.sparkContext.setLogLevel("WARN")
           try graft.streaming.StreamingNearDup.compact(spark, dir, buckets)

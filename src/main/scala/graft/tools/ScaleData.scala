@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Dev-only scale-validation data builder: synthesizes a `factor`×
   * corpus from an existing harness scale factor so the bench can be
@@ -38,13 +40,7 @@ object ScaleData {
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else _ => true
     require(factor >= 1, "factor must be >= 1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val idStride = 100000000L

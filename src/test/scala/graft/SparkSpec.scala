@@ -8,12 +8,8 @@ import org.scalatest.Suite
   * forked-JVM startup cheap).
   */
 trait SparkSpec extends BeforeAndAfterAll { this: Suite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
+  lazy val spark: SparkSession = GraftSession.builder("local[2]", 2)
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   override def afterAll(): Unit = {

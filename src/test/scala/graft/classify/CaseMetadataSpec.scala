@@ -2,7 +2,10 @@ package graft.classify
 
 import scala.util.Random
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Pins the contract Ingest's scan-once parties optimization depends
   * on: extracting group 0 once and re-running [[CaseMetadata.partiesPattern]]
@@ -12,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * constraint note on the pattern) — a future pattern edit that breaks
   * the property fails HERE, not silently in case_decision inputs.
   */
-class CaseMetadataSpec extends AnyFunSuite {
+class CaseMetadataSpec extends AnyFunSuite with SparkSpec {
 
   private val p = java.util.regex.Pattern.compile(CaseMetadata.partiesPattern)
 
@@ -90,5 +93,15 @@ class CaseMetadataSpec extends AnyFunSuite {
         assert(direct(text).isEmpty,
           s"guard suppressed a real match on '$text': ${direct(text)}")
     }
+  }
+
+  test("appellant/respondent: NULL text gives NULL; text without parties gives ''") {
+    import spark.implicits._
+    val rows = Seq(None, Some("no separator here"), Some("Perera v. Silva"))
+      .toDF("text")
+      .select(CaseMetadata.appellant(col("text")), CaseMetadata.respondent(col("text")))
+      .collect().map(r => (Option(r.getString(0)), Option(r.getString(1))))
+    assert(rows.toSeq == Seq((None, None), (Some(""), Some("")),
+      (Some("Perera"), Some("Silva"))))
   }
 }

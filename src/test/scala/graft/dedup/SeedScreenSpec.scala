@@ -1,6 +1,5 @@
 package graft.dedup
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec

@@ -67,7 +67,7 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
     assert(row.getSeq[Long](2).length == 2) // shingles "a b", "b c"
     assert(row.getAs[Long]("inter") == 1L)  // shared shingle: "a b"
     // SQL route equals the Column-API kernels
-    import org.apache.spark.sql.functions.{col, lit, split}
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val viaColumn = Seq(Tuple1("a b c")).toDF("t")
       .select(graft.dedup.Dedup.shingleHashes(col("t"), 2).as("sh"))

@@ -35,7 +35,6 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("batched extraction: bounded batches, same features as the per-row path") {
-    import spark.implicits._
     val many = spark.range(0, 25).repartition(1)
       .select(col("id").as("media_id"),
         concat(lit("payload "), col("id").cast("string")).cast("binary").as("data"))

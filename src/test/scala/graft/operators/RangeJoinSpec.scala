@@ -51,7 +51,6 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("agrees with a brute-force cross join on the sf0.001 events fixture") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Tables.events normalizes ts to the epoch-nanos-long contract
     // regardless of the fixture's timestamp physicality.
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")

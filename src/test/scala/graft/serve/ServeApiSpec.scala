@@ -338,4 +338,30 @@ class ServeApiSpec extends AnyFunSuite with SparkSpec {
     assert(r.statusCode() == 413)
     assert(r.body().contains("Request entity too large"))
   }
+
+  // ------------------------------------------------------------ //
+  // Lifecycle                                                    //
+  // ------------------------------------------------------------ //
+
+  test("stop() ends every request thread; start() works again") {
+    val svc = new CaseSearchService(spark, root, DeterministicEmbedder(dim = 16))
+    def health(p: Int): Int = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/api/v1/health")).GET().build(),
+      HttpResponse.BodyHandlers.ofString()).statusCode()
+    def poolThreads(p: Int): Seq[Thread] = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala.toSeq
+        .filter(_.getName.startsWith(s"graft-serve-$p-"))
+    }
+    for (_ <- 1 to 2) {
+      val p = svc.start()
+      assert(health(p) == 200)
+      val threads = poolThreads(p)
+      assert(threads.nonEmpty, "a served request runs on a named pool thread")
+      svc.stop()
+      threads.foreach(_.join(5000))
+      assert(threads.forall(!_.isAlive),
+        s"alive after stop(): ${threads.filter(_.isAlive).map(_.getName)}")
+    }
+  }
 }

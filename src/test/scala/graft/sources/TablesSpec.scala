@@ -1,7 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -58,5 +60,47 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
     val n = ord.where(col("o_orderdate") <
       lit(java.sql.Timestamp.valueOf("1998-01-01 00:00:00"))).count()
     assert(n == 1L)
+  }
+
+  // loadParallel: local[2] gives a target width of 2, and a table
+  // needs >= 128 rows (64 per task) before it is worth splitting
+
+  private def repartitioned(df: DataFrame): Boolean =
+    df.queryExecution.logical.exists(_.isInstanceOf[Repartition])
+
+  /** One single-row-group parquet part file holding `rows` rows. */
+  private def partFile(rows: Int): Path = {
+    val out = tmp()
+    spark.range(rows).toDF("doc_id").coalesce(1)
+      .write.mode("overwrite").parquet(out)
+    Files.list(Paths.get(out)).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get()
+  }
+
+  test("loadParallel leaves tables under 128 rows unsplit, empty ones too") {
+    for (rows <- Seq(0, 100)) {
+      val dir = tmp()
+      Files.createDirectories(Paths.get(dir, "documents.parquet"))
+      Files.copy(partFile(rows), Paths.get(dir, "documents.parquet", "part-0.parquet"))
+      val df = Tables.loadParallel(spark, dir, "documents")
+      assert(!repartitioned(df), s"$rows rows: ${df.queryExecution.logical}")
+      assert(df.count() == rows)
+    }
+  }
+
+  test("loadParallel re-reads the footer when a part file is overwritten in place") {
+    val dir = Paths.get(tmp(), "documents.parquet")
+    Files.createDirectories(dir)
+    val part = dir.resolve("part-0.parquet")
+    Files.copy(partFile(10), part)
+    assert(!repartitioned(Tables.loadParallel(spark, dir.getParent.toString, "documents")))
+    // same file name, new contents; the directory's own mtime and
+    // length stay as they were
+    val dirMtime = Files.getLastModifiedTime(dir)
+    Files.write(part, Files.readAllBytes(partFile(1000)))
+    Files.setLastModifiedTime(dir, dirMtime)
+    val df = Tables.loadParallel(spark, dir.getParent.toString, "documents")
+    assert(repartitioned(df), "a 1000-row single-row-group table splits across 2 tasks")
+    assert(df.count() == 1000L)
   }
 }

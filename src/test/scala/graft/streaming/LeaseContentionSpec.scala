@@ -41,7 +41,6 @@ class LeaseContentionSpec extends AnyFunSuite with SparkSpec {
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx2g",
-      "-Dspark.ui.enabled=false",
       "-cp", System.getProperty("java.class.path"),
       "graft.tools.LeaseContender") ++ args
     val pb = new ProcessBuilder(cmd: _*)

@@ -33,26 +33,6 @@ class RegistryContractSpec extends AnyFunSuite with SparkSpec {
   private def vec(seed: Long): Seq[Float] =
     (0 until Dim).map(i => (((seed * 37 + i * 11) % 13) - 6).toFloat)
 
-  private def runEmb(rows: Seq[(Long, Seq[Float])], registryDir: String,
-                     bands: Int, bits: Int):
-      Seq[(Long, Option[Long])] = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, Seq[Float])]
-    val got = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Long, Option[Long])]()
-    val q = StreamingEmbDedup.embDedupStream(
-      ms.toDS().toDF("id", "embedding"), col("id"), col("embedding"),
-      registryDir, buckets = 4, dim = Dim, bands = bands, bits = bits,
-      minCosine = 0.9) { df =>
-      df.collect().foreach(r => got.add((r.getLong(0),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)))))
-    }
-    try { ms.addData(rows); q.processAllAvailable() } finally q.stop()
-    import scala.jdk.CollectionConverters._
-    got.asScala.toSeq.sortBy(_._1)
-  }
-
   test("legacy marker-less registry refuses a derived-default resume " +
       "but trusted-stamps an explicit one") {
     import spark.implicits._

@@ -38,7 +38,6 @@ class StreamingIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("pdf drop directory streams extracted docs, batch == stream extraction") {
-    import spark.implicits._
     val in  = Files.createTempDirectory("graft-pdf-stream-in")
     val out = Files.createTempDirectory("graft-pdf-stream-out").toString
     val ckp = Files.createTempDirectory("graft-pdf-stream-ckp").toString

@@ -99,7 +99,8 @@ class StreamingSelfDedupSpec extends AnyFunSuite with SparkSpec {
     // append shape: each batch lands AT MOST one file per bucket (the
     // bucket-id repartition before the bucketed append) — without it a
     // batch writes partitions × buckets files and a long stream's
-    // listing/footer costs multiply 32× (measured via CompactProbe r14)
+    // listing/footer costs multiply 32× (r14: 15,650 files where the
+    // design said 512; SURVEY.md §8)
     val regFs = new org.apache.hadoop.fs.Path(regDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nFiles = regFs.listStatus(new org.apache.hadoop.fs.Path(regDir))

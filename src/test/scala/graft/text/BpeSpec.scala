@@ -50,7 +50,6 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("encode with no merges counts characters; trained merges compress") {
-    import spark.implicits._
     val d = docs("low low low lower lower")
     val none = Bpe.encodeTokenCounts(d, col("id"), col("text"), Nil).collect().head
     assert(none.getAs[Long]("n_bpe_tokens") == 19L) // 3·3 + 2·5 chars
@@ -124,7 +123,6 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
 test("scalable encode equals the expression route on trained merges") {
-    import spark.implicits._
     val d = docs("low low low lower lower", "the lowest slower flower",
       "unrelated words entirely", "")
     val m = Bpe.trainMerges(d, col("text"), 8).orderBy("step").collect()
@@ -137,7 +135,6 @@ test("scalable encode equals the expression route on trained merges") {
   }
 
   test("scalable encode at 256 merges matches a driver-side replay") {
-    import spark.implicits._
     val SEP = "\u001F"
     val rnd = new scala.util.Random(11)
     val vocab = Seq.tabulate(200) { i =>

@@ -157,7 +157,6 @@ class BlockMatrixSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("adversarial ids produce identical results to the window formulation") {
-    import spark.implicits._
     // strided ids through the full tiled join — correctness must be
     // independent of how badly the raw residues would have clustered
     val emb = Tables.embeddings(spark, dir)
