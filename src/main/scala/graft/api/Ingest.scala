@@ -98,21 +98,24 @@ object Ingest {
     * [[namedDocumentAttributes]] rows.
     */
   def chunkTableOf(spark: SparkSession, attrs: DataFrame,
-                   embedder: Embedder, maxWords: Int = 400): DataFrame = {
-    val chunks = ChunkPacker.chunkDocuments(spark, attrs, "key", "doc_text", maxWords)
-      .toDF()
-    chunks
+                   embedder: Embedder, maxWords: Int = 400): DataFrame =
+    chunkRows(spark, attrs, maxWords,
+      Some(embedder.embed(col("chunk_text")).as("embedding")))
+
+  /** Chunks joined to their document's attributes, in chunk-table column
+    * order; `embedding`, when given, goes right after `text`.
+    */
+  private def chunkRows(spark: SparkSession, attrs: DataFrame, maxWords: Int,
+                        embedding: Option[Column]): DataFrame =
+    ChunkPacker.chunkDocuments(spark, attrs, "key", "doc_text", maxWords).toDF()
       .join(attrs.drop("doc_text"), "key")
-      .select(
-        monotonically_increasing_id().as("chunk_id"),
-        col("chunk_text").as("text"),
-        embedder.embed(col("chunk_text")).as("embedding"),
+      .select(Seq(monotonically_increasing_id().as("chunk_id"),
+        col("chunk_text").as("text")) ++ embedding ++ Seq(
         col("file_name"), col("file_id"), col("court_level"),
         col("case_decision"),
         // extras beyond the reference schema, useful downstream
         col("key").as("doc_key"), col("chunk_idx"), col("n_words"),
-        col("document_type"))
-  }
+        col("document_type")): _*)
 
   /** [[chunkTableOf]] with the embedding computed OUT-OF-PLAN by the
     * batched HTTP client (F4's production arm,
@@ -128,24 +131,11 @@ object Ingest {
   def chunkTableRemote(spark: SparkSession, attrs: DataFrame,
                        cfg: graft.embed.HttpEmbedder.Config,
                        maxWords: Int = 400): DataFrame = {
-    val chunks = ChunkPacker.chunkDocuments(spark, attrs, "key", "doc_text", maxWords)
-      .toDF()
-    val base = chunks
-      .join(attrs.drop("doc_text"), "key")
-      .select(
-        monotonically_increasing_id().as("chunk_id"),
-        col("chunk_text").as("text"),
-        col("file_name"), col("file_id"), col("court_level"),
-        col("case_decision"),
-        col("key").as("doc_key"), col("chunk_idx"), col("n_words"),
-        col("document_type"))
-      .localCheckpoint()
+    val base = chunkRows(spark, attrs, maxWords, None).localCheckpoint()
     val vecs = graft.embed.HttpEmbedder.embed(spark, base, "chunk_id", "text", cfg)
+    // embedding back in its chunk-table place, right after chunk_id, text
     base.join(vecs, "chunk_id")
-      .select(col("chunk_id"), col("text"), col("embedding"),
-        col("file_name"), col("file_id"), col("court_level"),
-        col("case_decision"), col("doc_key"), col("chunk_idx"),
-        col("n_words"), col("document_type"))
+      .select(base.columns.toSeq.patch(2, Seq("embedding"), 0).map(col): _*)
   }
 
   /** S5 sink analog: append to the chunk-table parquet, partitioned by

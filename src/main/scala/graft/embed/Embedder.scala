@@ -1,7 +1,11 @@
 package graft.embed
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
 
 /** F4 — the embedding transform
   * (`/root/reference/extract_and_embed.py:80-82`), as a pluggable
@@ -21,31 +25,44 @@ trait Embedder {
 }
 
 /** Deterministic seeded hash-projection embedder — the offline
-  * correctness stand-in for ada-002 (the external model is
-  * non-deterministic and unavailable without egress; SURVEY §7.3).
-  * The text hashes ONCE per row (h = xxhash64(text, seed)); component
-  * j = xxhash64(h, j) folded into [-1, 1). Fixed text + seed → fixed
-  * vector; fully codegen, no UDF.
-  *
-  * Built as an UNROLLED `array(...)` rather than a
-  * `transform(sequence(...))` lambda on purpose: codegen's
-  * common-subexpression elimination hoists the repeated
-  * `xxhash64(text, seed)` subtree to one evaluation per row across
-  * the array elements, while a lambda body re-evaluates it per
-  * ELEMENT — the pre-r12 form hashed the full chunk text `dim` times
-  * per row and was the bench's hottest row once the measured action
-  * stopped letting Catalyst prune the embedding column
-  * (ingest_chunk_table 35.8s → the per-dim hash now touches 16
-  * bytes, not the text).
+  * correctness stand-in for ada-002 (non-deterministic, and unavailable
+  * without egress; SURVEY §7.3). The text hashes once per row,
+  * h = xxhash64(text, seed); component j = pmod(xxhash64(h, j), 2000001)
+  * − 1000000, scaled by 1e-6 and narrowed to float. The column is
+  * `array<float>` with `containsNull = true` and is never null (NULL
+  * text maps to one fixed vector).
   */
 final case class DeterministicEmbedder(dim: Int = 64, seed: Long = 42L) extends Embedder {
-  private val Bucket = 2000001L
+  def embed(text: Column): Column = GraftColumnBridge.column(
+    HashProjection(GraftColumnBridge.expression(xxhash64(text, lit(seed))), dim))
+}
 
-  def embed(text: Column): Column = {
-    val h = xxhash64(text, lit(seed))
-    array((0 until dim).map { j =>
-      ((pmod(xxhash64(h, lit(j.toLong)), lit(Bucket)) - lit(1000000L))
-        .cast("double") / 1000000.0).cast("float")
-    }: _*)
+/** All `dim` components from h in one loop, so the plan holds one node
+  * at any width. Spark's `xxhash64(h, j)` is
+  * XXH64.hashLong(j, XXH64.hashLong(h, 42)). Generated code calls
+  * [[vector]]: a `CodegenFallback` would drop the whole projection out
+  * of whole-stage codegen.
+  */
+private[embed] final case class HashProjection(child: Expression, dim: Int) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(FloatType, containsNull = true)
+
+  def vector(h: Long): ArrayData = {
+    val base = XXH64.hashLong(h, 42L)
+    val v = new Array[Float](dim)
+    var j = 0
+    while (j < dim) {
+      val m = java.lang.Math.floorMod(XXH64.hashLong(j.toLong, base), 2000001L)
+      v(j) = ((m - 1000000L).toDouble / 1000000.0).toFloat
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(v)
   }
+
+  override def nullSafeEval(input: Any): Any = vector(input.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, h => s"${ctx.addReferenceObj("embedder", this)}.vector($h)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

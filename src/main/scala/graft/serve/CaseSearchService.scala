@@ -237,6 +237,30 @@ final class CaseSearchService(spark: SparkSession, root: String,
       }
     }
 
+  /** (chunk_id, embedding) of each query text, by the local or the remote
+    * embedder. With `cfg.dropFailedBatches` the remote client drops the
+    * rows of a batch that exhausted its retries; ranking without them
+    * would render an embedding-service outage as a legitimate result.
+    * Surface it as the 500 it is (the outer handler turns this throw
+    * into an error reply).
+    */
+  private def embedQueries(texts: Seq[String]): DataFrame = {
+    import spark.implicits._
+    val ids = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("chunk_id", "__t")
+    remoteEmbedder match {
+      case Some(cfg) =>
+        val embedded = graft.embed.HttpEmbedder.embed(spark, ids, "chunk_id", "__t", cfg)
+          .select(col("chunk_id"), col("embedding"))
+          .localCheckpoint()
+        if (embedded.count() < texts.size)
+          throw new RuntimeException(
+            "Embedding service failed to embed the query text")
+        embedded
+      case None =>
+        ids.select(col("chunk_id"), embedder.embed(col("__t")).as("embedding"))
+    }
+  }
+
   /** The flagship plan against one collection: pushed `court_level`
     * partition filter → broadcast 1-row query vector → L2 score →
     * per-file best hit → ascending top-5. Collected rows are bounded
@@ -244,27 +268,7 @@ final class CaseSearchService(spark: SparkSession, root: String,
     */
   private def topMatches(representative: String, targetLevel: Int,
                          collection: String): Seq[(String, String, String, Double)] = {
-    import spark.implicits._
-    val query = remoteEmbedder match {
-      case Some(cfg) =>
-        val embedded = graft.embed.HttpEmbedder.embed(spark,
-            Seq((0L, representative)).toDF("chunk_id", "__t"),
-            "chunk_id", "__t", cfg)
-          .select(col("embedding").as("q_emb"))
-          .localCheckpoint()
-        // With cfg.dropFailedBatches the embed client returns an EMPTY
-        // frame after retry exhaustion; joining that against the corpus
-        // would render an embedding-service outage as a legitimate
-        // zero-result response. Surface it as the 500 it is (the outer
-        // handler turns this throw into an error reply).
-        if (embedded.isEmpty)
-          throw new RuntimeException(
-            "Embedding service failed to embed the query text")
-        embedded
-      case None =>
-        Seq(representative).toDF("__t")
-          .select(embedder.embed(col("__t")).as("q_emb"))
-    }
+    val query = embedQueries(Seq(representative)).select(col("embedding").as("q_emb"))
     val corpus = collectionFrame(collection)
       .where(col("court_level") === targetLevel)
       .select(col("chunk_id"), col("file_id"), col("file_name"),
@@ -323,24 +327,8 @@ final class CaseSearchService(spark: SparkSession, root: String,
     */
   private def maxsimMatches(chunks: Seq[String], targetLevel: Int,
       collection: String, k: Int): Seq[(String, String, String, Double)] = {
-    import spark.implicits._
-    val ids = chunks.zipWithIndex.map { case (c, i) => (i.toLong, c) }
-    val qvecs = remoteEmbedder match {
-      case Some(cfg) =>
-        val embedded = graft.embed.HttpEmbedder.embed(spark,
-            ids.toDF("chunk_id", "__t"), "chunk_id", "__t", cfg)
-          .select(lit(0L).as("query_id"), col("chunk_id").as("qvec_id"),
-            col("embedding").as("qvec"))
-          .localCheckpoint()
-        if (embedded.count() < chunks.size)
-          throw new RuntimeException(
-            "Embedding service failed to embed the query text")
-        embedded
-      case None =>
-        ids.toDF("qvec_id", "__t")
-          .select(lit(0L).as("query_id"), col("qvec_id"),
-            embedder.embed(col("__t")).as("qvec"))
-    }
+    val qvecs = embedQueries(chunks).select(lit(0L).as("query_id"),
+      col("chunk_id").as("qvec_id"), col("embedding").as("qvec"))
     val corpus = collectionFrame(collection)
       .where(col("court_level") === targetLevel)
       .select(xxhash64(col("file_id")).as("doc_key"),

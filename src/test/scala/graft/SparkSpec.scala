@@ -13,6 +13,9 @@ trait SparkSpec extends BeforeAndAfterAll { this: Suite =>
     .getOrCreate()
 
   override def afterAll(): Unit = {
+    // Stateful-stream suites leave a StateStore maintenance task that
+    // would keep calling the stopped context's coordinator.
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     spark.stop()
     super.afterAll()
   }

@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -28,6 +29,8 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     val names = table.schema.fieldNames.toSeq
     assert(names.take(7) == Seq("chunk_id", "text", "embedding", "file_name",
       "file_id", "court_level", "case_decision"))
+    val emb = table.schema("embedding")
+    assert(emb.dataType == ArrayType(FloatType, containsNull = true) && !emb.nullable)
   }
 
   test("document attributes replicate onto every chunk of the document") {
