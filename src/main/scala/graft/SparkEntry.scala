@@ -283,10 +283,6 @@ object SparkEntry {
         val pdfDir = PdfFixture.ensure(s)
         val docs = BinaryDocs.scanPdfDir(s, pdfDir).toDF()
         val emb = graft.embed.DeterministicEmbedder(dim = 16)
-        val chunks = ChunkPacker.chunkDocuments(s, docs,
-            "file_name", "text", maxWords = PdfFixture.MaxWords)
-          .groupBy(col("key").as("file_name"))
-          .agg(count(lit(1)).as("n_chunks"))
         val scored = docs.select(col("file_name"), col("file_id"),
           col("text"), Cascades.decision(col("text")).as("case_decision"),
           emb.embed(col("text")).as("__v"))
@@ -303,8 +299,10 @@ object SparkEntry {
           .select(col("file_name"), col("cand").as("top_match"),
             col("top_score"))
         val stats = WinStats.over(scored, col("case_decision"))
-        scored.select("file_name", "file_id", "case_decision")
-          .join(chunks, "file_name").join(top1, "file_name")
+        scored.select(col("file_name"), col("file_id"), col("case_decision"),
+            size(ChunkPacker.chunks(col("text"), PdfFixture.MaxWords))
+              .cast("long").as("n_chunks"))
+          .join(top1, "file_name")
           .crossJoin(broadcast(stats))
           .orderBy("file_name")
       },
@@ -1685,9 +1683,8 @@ object SparkEntry {
             transform(array_sort(collect_list(struct(col("doc_id"), col("text")))),
               x => x.getField("text")),
             "\n\n").as("big_text"))
-        ChunkPacker.chunkDocuments(s, big, "source", "big_text")
-          .toDF()
-          .select(col("key").as("source"), col("chunk_idx"), col("n_words"),
+        big.select(col("source"), inline(ChunkPacker.chunks(col("big_text"))))
+          .select(col("source"), col("chunk_idx"), col("n_words"),
             md5(col("chunk_text")).as("chunk_md5"))
           .orderBy("source", "chunk_idx")
       },

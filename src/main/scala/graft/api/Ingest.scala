@@ -1,6 +1,7 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
 
 import graft.classify.{Cascades, CaseMetadata}
@@ -12,14 +13,19 @@ import graft.text.ChunkPacker
   * DataFrame composition:
   *
   *   document rows → document-level attributes (file_id hash, type,
-  *   decision with metadata retry) → per-document chunk flatMap →
-  *   per-chunk embedding → fixed chunk-table schema → parquet append.
+  *   decision with metadata retry) → `inline` of the per-document
+  *   chunk generator → per-chunk embedding → fixed chunk-table schema
+  *   → parquet append.
   *
-  * Whole-document operators compute once per document and ride into
-  * the chunk flatMap (no join-back needed for the computed columns —
-  * they are projected before chunking, carried through as the flatMap
-  * key joins back on one narrow column). Embedding happens after
-  * chunking, chunk-parallel.
+  * Whole-document operators compute once per document, in the
+  * document row's projection; the chunk generator
+  * ([[ChunkPacker.chunks]]) then expands that same row, so every
+  * attribute rides onto its chunks with no join back to the documents
+  * (a join would re-run the document source — scan, PDF extraction —
+  * once per side). Embedding happens after chunking, chunk-parallel.
+  * Batch ([[chunkTable]]) and streaming
+  * ([[graft.streaming.StreamingIngest.ingestColumns]]) ingest build
+  * their rows through the same [[chunkRows]].
   */
 object Ingest {
 
@@ -99,23 +105,30 @@ object Ingest {
     */
   def chunkTableOf(spark: SparkSession, attrs: DataFrame,
                    embedder: Embedder, maxWords: Int = 400): DataFrame =
-    chunkRows(spark, attrs, maxWords,
-      Some(embedder.embed(col("chunk_text")).as("embedding")))
+    withChunkId(chunkRows(attrs, maxWords, Some(embedder)))
 
-  /** Chunks joined to their document's attributes, in chunk-table column
-    * order; `embedding`, when given, goes right after `text`.
+  /** Each document's chunks, expanded in place by the chunk generator,
+    * in chunk-table column order without `chunk_id` (streaming plans
+    * reject `monotonically_increasing_id`); with an `embedder`, the
+    * `embedding` goes right after `text`.
     */
-  private def chunkRows(spark: SparkSession, attrs: DataFrame, maxWords: Int,
-                        embedding: Option[Column]): DataFrame =
-    ChunkPacker.chunkDocuments(spark, attrs, "key", "doc_text", maxWords).toDF()
-      .join(attrs.drop("doc_text"), "key")
-      .select(Seq(monotonically_increasing_id().as("chunk_id"),
-        col("chunk_text").as("text")) ++ embedding ++ Seq(
+  private[graft] def chunkRows(attrs: DataFrame, maxWords: Int,
+                               embedder: Option[Embedder]): DataFrame =
+    attrs.select(col("*"), inline(ChunkPacker.chunks(col("doc_text"), maxWords)))
+      .select(Seq(col("chunk_text").as("text")) ++
+        embedder.map(_.embed(col("chunk_text")).as("embedding")) ++ Seq(
         col("file_name"), col("file_id"), col("court_level"),
         col("case_decision"),
-        // extras beyond the reference schema, useful downstream
-        col("key").as("doc_key"), col("chunk_idx"), col("n_words"),
-        col("document_type")): _*)
+        // extras beyond the reference schema, useful downstream;
+        // doc_key is declared nullable whatever the caller's id column,
+        // so the table's schema does not depend on it
+        GraftColumnBridge.column(KnownNullable(GraftColumnBridge.expression(col("key"))))
+          .as("doc_key"),
+        col("chunk_idx"), col("n_words"), col("document_type")): _*)
+
+  /** [[chunkRows]] led by the assigned-on-write `chunk_id`. */
+  private def withChunkId(rows: DataFrame): DataFrame =
+    rows.select(monotonically_increasing_id().as("chunk_id") +: rows.columns.toSeq.map(col): _*)
 
   /** [[chunkTableOf]] with the embedding computed OUT-OF-PLAN by the
     * batched HTTP client (F4's production arm,
@@ -131,7 +144,7 @@ object Ingest {
   def chunkTableRemote(spark: SparkSession, attrs: DataFrame,
                        cfg: graft.embed.HttpEmbedder.Config,
                        maxWords: Int = 400): DataFrame = {
-    val base = chunkRows(spark, attrs, maxWords, None).localCheckpoint()
+    val base = withChunkId(chunkRows(attrs, maxWords, None)).localCheckpoint()
     val vecs = graft.embed.HttpEmbedder.embed(spark, base, "chunk_id", "text", cfg)
     // embedding back in its chunk-table place, right after chunk_id, text
     base.join(vecs, "chunk_id")

@@ -330,21 +330,9 @@ object Spans {
     val winIv = intervalsOf(protWin, n).withColumnRenamed("iv", "wiv")
     (applyIntervals(toks, lossIv, Some(winIv)),
       fresh.select("h", "gram").distinct(),
-      () => { unpinLocalCheckpoint(seeds); unpinLocalCheckpoint(fresh) })
+      () => Seq(seeds, fresh).foreach(
+        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint))
   }
-
-  /** Unpersist the block-backed RDD behind a `localCheckpoint()`ed
-    * frame. `Dataset.unpersist` only touches the CacheManager, not the
-    * checkpoint's storage blocks — those are otherwise reclaimed only
-    * when the RDD object is GC'd (ContextCleaner), which is unbounded
-    * on a long-running stream pinning two per batch.
-    */
-  private def unpinLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** DuckDB twin of the [[clipSpansPrefixStep]] STREAM over a full
     * corpus fed in doc_id order: identical to [[clipSpansSql]] except

@@ -12,14 +12,13 @@ import org.apache.spark.sql.functions._
   * read), and per-file rows (path, modificationTime, length, content)
   * — at 100 TB of PDFs the scan parallelizes over files with no
   * driver-side directory walk. Extraction runs once per file inside
-  * `mapPartitions`, so a real parser (PDFBox on the JVM) would be
-  * instantiated once per task, not once per file.
+  * `mapPartitions`, so a parser that needs setup pays it once per
+  * task, not once per file.
   *
-  * The parser itself is STUBBED (no PDF library ships in this
-  * container): a deterministic function of the bytes that preserves
-  * the real contract — page texts joined by "\n", empty input → empty
-  * text. The Spark-side plumbing (source format, glob pushdown,
-  * partition-amortized extraction, output schema) is real and tested.
+  * Real PDF payloads go through [[PdfTextExtractor]]. Only payloads
+  * without the `%PDF-` magic (the synthetic test fixtures) fall
+  * back to a deterministic stub of the bytes that keeps the same
+  * contract — page texts joined by "\n", empty input → empty text.
   */
 object BinaryDocs {
 
@@ -57,35 +56,39 @@ object BinaryDocs {
     else extractStub(data)
 
   /** One extracted row: reference file key (F3,
-    * `extract_and_embed.py:95` — `sha256(file_name)`) + stub-parsed text.
+    * `extract_and_embed.py:95` — `sha256(file_name)`) + extracted text.
     */
-  def toDoc(name: String, len: Long, bytes: Array[Byte]): ExtractedDoc =
+  private def toDoc(name: String, len: Long, bytes: Array[Byte]): ExtractedDoc =
     ExtractedDoc(name,
       java.security.MessageDigest.getInstance("SHA-256")
         .digest(name.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString,
       len, extractText(bytes))
 
-  /** Scan a directory of PDFs into extracted-document rows.
-    * Zero-length files yield no row (binaryFile emits no split for
-    * them).
+  /** Extracted-document rows of a `binaryFile` frame, batch or
+    * streaming ([[graft.streaming.StreamingIngest.pdfStream]]).
     */
-  def scanPdfDir(spark: SparkSession, dir: String,
-                 glob: String = "*.pdf"): Dataset[ExtractedDoc] = {
+  def extract(files: DataFrame): Dataset[ExtractedDoc] = {
+    val spark = files.sparkSession
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-      .select(
+    files.select(
         element_at(split(col("path"), "/"), -1).as("file_name"),
         col("length").as("n_bytes"),
         col("content"))
       .as[(String, Long, Array[Byte])]
       .mapPartitions { rows =>
-        // a real parser initializes HERE, once per task
+        // a parser that needs setup initializes HERE, once per task
         rows.map { case (name, len, bytes) => toDoc(name, len, bytes) }
       }
   }
+
+  /** Scan a directory of PDFs into extracted-document rows.
+    * Zero-length files yield no row (binaryFile emits no split for
+    * them).
+    */
+  def scanPdfDir(spark: SparkSession, dir: String,
+                 glob: String = "*.pdf"): Dataset[ExtractedDoc] =
+    extract(spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir))
 
   /** The S6 JSON result sink (`extract_and_search_v2.py:361-376`,
     * golden shape README.md:18-64): serialize result rows to the

@@ -5,16 +5,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.classify.Cascades
+import graft.api.Ingest
 import graft.embed.Embedder
+import graft.sources.BinaryDocs
 
 /** Structured-Streaming extension (SURVEY §1.3: the reference is pure
   * request/response, so streaming is an extension, not parity): a
   * file-drop ingest directory replaces the reference's HTTP upload
   * endpoint (S3). New parquet files landing in `inputDir` flow through
-  * the same classification + embedding columns as batch ingest and
-  * append to the chunk table — identical semantics, incremental
-  * execution, exactly-once via the checkpoint.
+  * the batch ingest's own chunk-row function ([[ingestColumns]]) and append to
+  * the chunk table — the same rows as batch ingest minus `chunk_id`,
+  * incremental execution, exactly-once via the checkpoint.
   */
 object StreamingIngest {
 
@@ -25,70 +26,36 @@ object StreamingIngest {
 
   /** Streaming source over a drop directory of PDFs — the reference's
     * upload endpoint (S3) as a tailed directory of binary files. Each
-    * new file becomes one extracted-document row via the same
-    * per-partition (stubbed) extractor as the batch
-    * [[graft.sources.BinaryDocs]] scan; `maxFilesPerTrigger` bounds
-    * per-batch work so a backlogged drop directory drains in steady
-    * increments instead of one giant micro-batch.
+    * new file becomes one extracted-document row through the same
+    * [[graft.sources.BinaryDocs.extract]] projection as the batch scan;
+    * `maxFilesPerTrigger` bounds per-batch work so a backlogged drop
+    * directory drains in steady increments instead of one giant
+    * micro-batch.
     */
   def pdfStream(spark: SparkSession, inputDir: String,
                 maxFilesPerTrigger: Int = 100): DataFrame = {
-    import spark.implicits._
     // binaryFile's schema is fixed by the format, but the streaming
     // source requires it stated explicitly
     val binarySchema = StructType.fromDDL(
       "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-    spark.readStream.format("binaryFile")
+    BinaryDocs.extract(spark.readStream.format("binaryFile")
       .schema(binarySchema)
       .option("pathGlobFilter", "*.pdf")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(inputDir)
-      .select(
-        element_at(split(col("path"), "/"), -1).as("file_name"),
-        col("length").as("n_bytes"),
-        col("content"))
-      .as[(String, Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (name, len, bytes) =>
-          graft.sources.BinaryDocs.toDoc(name, len, bytes)
-        }
-      }
-      .toDF()
+      .load(inputDir)).toDF()
   }
 
-  /** One streamed chunk row carrying its document-level attributes. */
-  final case class StreamChunk(key: String, chunk_idx: Int, chunk_text: String,
-                               court_level: Int, case_decision: String)
-
-  /** The per-document ingest pipeline: classify at document level, then
-    * chunk via a typed flatMap that carries the document attributes
-    * along (documents are independent, so chunking is stateless with
-    * respect to the stream and runs incrementally — no stream-stream
-    * join, no state store), then embed chunk-parallel. Same semantics
-    * as batch [[graft.api.Ingest]].
+  /** The batch ingest rows of [[graft.api.Ingest.chunkTable]], built by
+    * the same document attributes and chunk generator, minus
+    * `chunk_id` (streaming plans reject `monotonically_increasing_id`).
+    * Documents are independent, so chunking is stateless with respect
+    * to the stream and runs incrementally — no stream-stream join, no
+    * state store.
     */
   def ingestColumns(docs: DataFrame, idCol: Column, textCol: Column,
-                    courtLevel: Column, embedder: Embedder): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val attrs = docs.select(
-      idCol.cast("string").as("key"),
-      textCol.as("doc_text"),
-      courtLevel.cast("int").as("court_level"),
-      Cascades.decision(textCol).as("case_decision"))
-    val chunks = attrs.as[(String, String, Int, String)].flatMap {
-      case (key, text, lvl, dec) =>
-        graft.text.ChunkPacker.chunkText(if (text == null) "" else text)
-          .zipWithIndex.map { case (c, i) => StreamChunk(key, i, c, lvl, dec) }
-    }
-    chunks.toDF()
-      .select(
-        col("chunk_text").as("text"),
-        embedder.embed(col("chunk_text")).as("embedding"),
-        concat(lit("doc_"), col("key"), lit(".pdf")).as("file_name"),
-        sha2(concat(lit("doc_"), col("key"), lit(".pdf")), 256).as("file_id"),
-        col("court_level"), col("case_decision"), col("chunk_idx"))
-  }
+                    courtLevel: Column, embedder: Embedder): DataFrame =
+    Ingest.chunkRows(Ingest.documentAttributes(docs, idCol, textCol, courtLevel),
+      maxWords = 400, Some(embedder))
 
   /** Start the file-drop → chunk-table pipeline. `Trigger.AvailableNow`
     * drains everything present then stops — the batch-refresh pattern;

@@ -1,15 +1,19 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.types._
 
 /** F1 + F2 — paragraph split and greedy chunk packing, the reference's
   * ingest-side text pipeline (`/root/reference/extract_and_embed.py:62-77`,
   * clones in all four services).
   *
   * The packer is an order-dependent stateful fold — not columnar — so
-  * it runs as a per-document `flatMap` over a typed Dataset: document
-  * rows are independent, so the operation is embarrassingly parallel
-  * and scales with the number of documents regardless of per-doc size.
+  * it runs per document inside one generator column ([[chunks]]):
+  * document rows are independent, so the operation is embarrassingly
+  * parallel and scales with the number of documents regardless of
+  * per-doc size.
   *
   * Bit-for-bit quirks of the reference, preserved deliberately:
   *  - paragraphs accumulate via `current += "\n" + para` (no space), so
@@ -64,23 +68,28 @@ object ChunkPacker {
   def chunkText(text: String, maxWords: Int = 400): Seq[String] =
     pack(paragraphs(text), maxWords)
 
-  /** One emitted chunk of a document. */
-  final case class Chunk(key: String, chunk_idx: Int, chunk_text: String, n_words: Long)
-
-  /** DataFrame wrapper: (key, text) rows → exploded chunk rows. The
-    * flatMap is narrow (no shuffle); document attributes computed
-    * upstream ride along by joining on `key` or, cheaper, by computing
-    * them on the document row before chunking.
+  /** Element type of [[chunks]]. `chunk_idx`/`n_words` are declared
+    * non-nullable, and so is the array's element: `inline` marks every
+    * field nullable when the array may hold NULL elements.
     */
-  def chunkDocuments(spark: SparkSession, docs: DataFrame,
-                     keyCol: String, textCol: String,
-                     maxWords: Int = 400): Dataset[Chunk] = {
-    import spark.implicits._
-    docs.selectExpr(s"CAST($keyCol AS STRING)", textCol).as[(String, String)]
-      .flatMap { case (key, text) =>
-        chunkText(if (text == null) "" else text, maxWords).zipWithIndex.map {
-          case (c, i) => Chunk(key, i, c, wordCount(c).toLong)
+  private val ChunkType = ArrayType(StructType(Seq(
+    StructField("chunk_idx", IntegerType, nullable = false),
+    StructField("chunk_text", StringType),
+    StructField("n_words", LongType, nullable = false))), containsNull = false)
+
+  /** F2 as a generator column: a document's text →
+    * `array<struct<chunk_idx, chunk_text, n_words>>`, one element per
+    * packed chunk (NULL or empty text → no chunks). Expand it with
+    * `inline` in the document row's own `select`, so every other
+    * column of the row rides onto its chunks — no join back to the
+    * documents.
+    */
+  def chunks(text: Column, maxWords: Int = 400): Column =
+    udf(new UDF1[String, Seq[Row]] {
+      def call(t: String): Seq[Row] =
+        if (t == null) Nil
+        else chunkText(t, maxWords).zipWithIndex.map { case (c, i) =>
+          Row(i, c, wordCount(c).toLong)
         }
-      }
-  }
+    }, ChunkType)(text)
 }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.Pipelines
+import graft.api.{Ingest, Pipelines}
 import graft.dedup.Dedup
+import graft.embed.DeterministicEmbedder
 import graft.operators.Splits
-import graft.sources.Tables
+import graft.sources.{BinaryDocs, Tables}
 import graft.text.TextAnalysis
 import graft.vector.{BlockMatrix, Knn}
 
@@ -60,6 +61,27 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     val nljs = "BroadcastNestedLoopJoin \\w+".r.findAllIn(plan).toSeq
     assert(nljs.forall(_.endsWith("BuildRight")),
       s"nested-loop join building the streamed side: $nljs\n$plan")
+  }
+
+  test("ingest chunks each document in place: one source scan, no join, no broadcast") {
+    // the final plan only: an adaptive plan also prints its initial plan
+    def finalPlan(df: DataFrame) = executed(df).split("== Initial Plan ==")(0)
+    def assertInPlace(plan: String, scan: String): Unit = {
+      assert(s"FileScan $scan".r.findAllIn(plan).length == 1,
+        s"source scanned more than once:\n$plan")
+      assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"),
+        s"chunks joined back to their documents:\n$plan")
+    }
+    val emb = DeterministicEmbedder(dim = 16)
+    assertInPlace(finalPlan(Ingest.chunkTable(spark, Tables.documents(spark, dir),
+      col("doc_id"), col("text"), pmod(col("doc_id"), lit(10)), emb)), "parquet")
+
+    val pdfs = java.nio.file.Files.createTempDirectory("graft-plan-pdfs")
+    (1 to 3).foreach(i => java.nio.file.Files.write(pdfs.resolve(s"d$i.pdf"),
+      Array.fill[Byte](300 * i)(i.toByte)))
+    val docs = BinaryDocs.scanPdfDir(spark, pdfs.toString).toDF()
+    val attrs = Ingest.namedDocumentAttributes(docs, col("file_name"), col("text"), lit(1))
+    assertInPlace(finalPlan(Ingest.chunkTableOf(spark, attrs, emb)), "binaryFile")
   }
 
   test("block-matrix tiles meet through an equi-join, never a nested loop") {

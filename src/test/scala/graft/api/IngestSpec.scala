@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -26,11 +26,22 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     pmod(col("doc_id"), lit(10)), DeterministicEmbedder(dim = 8))
 
   test("chunk-table schema matches the reference collection") {
-    val names = table.schema.fieldNames.toSeq
-    assert(names.take(7) == Seq("chunk_id", "text", "embedding", "file_name",
-      "file_id", "court_level", "case_decision"))
-    val emb = table.schema("embedding")
-    assert(emb.dataType == ArrayType(FloatType, containsNull = true) && !emb.nullable)
+    // every field's (name, type, nullable), in order — the generator
+    // must not loosen chunk_idx/n_words, nor tighten doc_key to the
+    // caller's non-null id column
+    val fields = table.schema.fields.toSeq.map(f => (f.name, f.dataType, f.nullable))
+    assert(fields == Seq(
+      ("chunk_id", LongType, false),
+      ("text", StringType, true),
+      ("embedding", ArrayType(FloatType, containsNull = true), false),
+      ("file_name", StringType, false),
+      ("file_id", StringType, true),
+      ("court_level", IntegerType, true),
+      ("case_decision", StringType, false),
+      ("doc_key", StringType, true),
+      ("chunk_idx", IntegerType, false),
+      ("n_words", LongType, false),
+      ("document_type", StringType, false)))
   }
 
   test("document attributes replicate onto every chunk of the document") {

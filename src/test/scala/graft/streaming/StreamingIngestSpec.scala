@@ -37,6 +37,45 @@ class StreamingIngestSpec extends AnyFunSuite with SparkSpec {
     assert(result.select("embedding").collect().forall(_.getSeq[Float](0).length == 8))
   }
 
+  test("streamed ingest rows equal the batch chunk table without chunk_id") {
+    import spark.implicits._
+    val in  = Files.createTempDirectory("graft-stream-eq-in").toString
+    val out = Files.createTempDirectory("graft-stream-eq-out").toString
+    val ckp = Files.createTempDirectory("graft-stream-eq-ckp").toString
+
+    // doc 4: the cascade misses on the text alone; the page-1 metadata
+    // (case number "7/appeal" + parties "Dismissed Corp") reads
+    // "7/appeal Dismissed Corp ...", which the C4 retry decides
+    val retried = "Dismissed Corp versus State of Goa. Case no. 7/appeal"
+    val docs = Seq[(Long, String)](
+      (1L, "the appeal is allowed " + ("w " * 500)),
+      (2L, "appeal dismissed with costs\n\nsecond paragraph"),
+      (3L, "high court writ petition, nothing decisive"),
+      (4L, retried),
+      (5L, null),
+      (6L, "")).toDF("doc_id", "text")
+    docs.write.mode("overwrite").parquet(in)
+    val docsIn = spark.read.parquet(in)
+    assert(docsIn.where(col("doc_id") === 4)
+      .select(graft.classify.Cascades.decision(col("text"))).as[String].head() == "invalid")
+
+    val emb = DeterministicEmbedder(dim = 8)
+    val level = pmod(col("doc_id"), lit(10))
+    StreamingIngest.start(spark, in, docsIn.schema, "doc_id", "text", level, emb, out, ckp)
+      .awaitTermination(60000)
+
+    val batch = graft.api.Ingest.chunkTable(spark, docsIn, col("doc_id"), col("text"),
+      level, emb).drop("chunk_id")
+    val streamed = spark.read.parquet(out).select(batch.columns.toSeq.map(col): _*)
+    assert(streamed.count() == batch.count())
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+    // NULL and empty text give no chunk rows (and no failure)
+    assert(streamed.select("doc_key").distinct().as[String].collect().sorted.toSeq
+      == Seq("1", "2", "3", "4"))
+    assert(streamed.where(col("doc_key") === "4").select("case_decision")
+      .as[String].collect().toSeq == Seq("appellant_lost"))
+  }
+
   test("pdf drop directory streams extracted docs, batch == stream extraction") {
     val in  = Files.createTempDirectory("graft-pdf-stream-in")
     val out = Files.createTempDirectory("graft-pdf-stream-out").toString
