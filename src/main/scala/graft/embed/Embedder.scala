@@ -1,7 +1,7 @@
 package graft.embed
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, UnsafeArrayData, XXH64, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -22,6 +22,16 @@ trait Embedder {
 
   /** Embedding of a text column as `array<float>` of [[dim]]. */
   def embed(text: Column): Column
+
+  /** [[embed]] of a few texts, in order, on the driver. By default a
+    * local query: the optimizer folds its projection, so it starts no
+    * job, but it is analyzed, optimized and planned like any query.
+    */
+  def vectors(spark: SparkSession, texts: Seq[String]): Seq[Array[Float]] = {
+    import spark.implicits._
+    texts.toDF("__t").select(embed(col("__t"))).collect()
+      .map(_.getSeq[Float](0).toArray).toSeq
+  }
 }
 
 /** Deterministic seeded hash-projection embedder — the offline
@@ -35,6 +45,14 @@ trait Embedder {
 final case class DeterministicEmbedder(dim: Int = 64, seed: Long = 42L) extends Embedder {
   def embed(text: Column): Column = GraftColumnBridge.column(
     HashProjection(GraftColumnBridge.expression(xxhash64(text, lit(seed))), dim))
+
+  /** [[embed]]'s expression built resolved and evaluated directly, with
+    * no query around it: a search embeds one text per request, and
+    * planning a query for it costs more than the hashing.
+    */
+  override def vectors(spark: SparkSession, texts: Seq[String]): Seq[Array[Float]] =
+    texts.map(t => HashProjection(new XxHash64(Seq(Literal(t), Literal(seed))), dim)
+      .eval().asInstanceOf[ArrayData].toFloatArray())
 }
 
 /** All `dim` components from h in one loop, so the plan holds one node

@@ -4,7 +4,7 @@ import java.io.InputStream
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ExecutorService, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, ThreadFactory, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 
 import graft.api.Ingest
 import graft.embed.Embedder
-import graft.sources.PdfTextExtractor
+import graft.sources.{FileStamp, PdfTextExtractor}
 import graft.stats.WinStats
 import graft.text.ChunkPacker
 import graft.vector.{Distance, Knn}
@@ -49,7 +49,7 @@ import graft.vector.{Distance, Knn}
   * store analog where Milvus held the `case_files` collection. Search
   * reads it with the `court_level` filter pushed into partition
   * pruning, so per-request cost is the one target level, not the
-  * corpus.
+  * corpus, and reuses its frame until a part file changes.
   *
   * == Live clients ==
   *
@@ -79,6 +79,7 @@ final class CaseSearchService(spark: SparkSession, root: String,
 
   private var server: HttpServer = _
   private var requests: ExecutorService = _
+  private val frames = new ConcurrentHashMap[String, CachedFrame]()
 
   /** Bound port after [[start]]. */
   def port: Int = server.getAddress.getPort
@@ -237,50 +238,49 @@ final class CaseSearchService(spark: SparkSession, root: String,
       }
     }
 
-  /** (chunk_id, embedding) of each query text, by the local or the remote
-    * embedder. With `cfg.dropFailedBatches` the remote client drops the
-    * rows of a batch that exhausted its retries; ranking without them
-    * would render an embedding-service outage as a legitimate result.
-    * Surface it as the 500 it is (the outer handler turns this throw
-    * into an error reply).
+  /** The embedding of each query text, in text order, by the local or
+    * the remote embedder, collected to the driver. The local embedder
+    * computes it there ([[Embedder.vectors]]), with no query and no job.
+    * With `cfg.dropFailedBatches` the remote client drops the rows of a
+    * batch that exhausted its retries; ranking without them would render
+    * an embedding-service outage as a legitimate result. Surface it as
+    * the 500 it is (the outer handler turns this throw into an error
+    * reply).
     */
-  private def embedQueries(texts: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val ids = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("chunk_id", "__t")
-    remoteEmbedder match {
+  private def embedQueries(texts: Seq[String]): Seq[Array[Float]] = {
+    val vectors = remoteEmbedder match {
       case Some(cfg) =>
-        val embedded = graft.embed.HttpEmbedder.embed(spark, ids, "chunk_id", "__t", cfg)
-          .select(col("chunk_id"), col("embedding"))
-          .localCheckpoint()
-        if (embedded.count() < texts.size)
-          throw new RuntimeException(
-            "Embedding service failed to embed the query text")
-        embedded
-      case None =>
-        ids.select(col("chunk_id"), embedder.embed(col("__t")).as("embedding"))
+        import spark.implicits._
+        val ids = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("chunk_id", "__t")
+        graft.embed.HttpEmbedder.embed(spark, ids, "chunk_id", "__t", cfg)
+          .select(col("chunk_id"), col("embedding")).collect()
+          .filter(!_.isNullAt(1)).sortBy(_.getLong(0))
+          .map(_.getSeq[Float](1).toArray).toSeq
+      case None => embedder.vectors(spark, texts)
     }
+    if (vectors.size < texts.size)
+      throw new RuntimeException("Embedding service failed to embed the query text")
+    vectors
   }
 
   /** The flagship plan against one collection: pushed `court_level`
-    * partition filter → broadcast 1-row query vector → L2 score →
-    * per-file best hit → ascending top-5. Collected rows are bounded
-    * at 5 by construction.
+    * partition filter → L2 score against the query vector, bound as a
+    * literal ([[Knn.vectorLit]]) → per-file best hit → ascending top-5,
+    * all in one Spark job ([[Knn.nearestGroups]]). The literal array is
+    * a codegen reference object, so every request reuses the same
+    * generated class. Chunks without an embedding never rank, as Milvus
+    * cannot hold a null vector.
     */
   private def topMatches(representative: String, targetLevel: Int,
                          collection: String): Seq[(String, String, String, Double)] = {
-    val query = embedQueries(Seq(representative)).select(col("embedding").as("q_emb"))
-    val corpus = collectionFrame(collection)
+    val vec = embedQueries(Seq(representative)).head
+    val scored = collectionFrame(collection)
       .where(col("court_level") === targetLevel)
       .select(col("chunk_id"), col("file_id"), col("file_name"),
-        col("case_decision"), col("embedding"))
-    val scored = Knn.scored(corpus, query, col("embedding"), Distance.l2)
-      .drop("embedding")
-    Knn.topK(Knn.bestPerGroup(scored, col("file_id"), col("chunk_id")),
-        5, col("file_id"))
-      .select(col("file_id"), col("file_name"), col("case_decision"),
-        col("score").cast("double"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3)))
+        col("case_decision"),
+        round(Distance.l2(col("embedding"), Knn.vectorLit(vec)), 4).as("score"))
+    Knn.nearestGroups(scored, 5, col("file_id"), col("chunk_id"))
+      .map(r => (r.getString(1), r.getString(2), r.getString(3), r.getDouble(4)))
       .toSeq
   }
 
@@ -327,8 +327,11 @@ final class CaseSearchService(spark: SparkSession, root: String,
     */
   private def maxsimMatches(chunks: Seq[String], targetLevel: Int,
       collection: String, k: Int): Seq[(String, String, String, Double)] = {
-    val qvecs = embedQueries(chunks).select(lit(0L).as("query_id"),
-      col("chunk_id").as("qvec_id"), col("embedding").as("qvec"))
+    val qvecs = {
+      import spark.implicits._
+      embedQueries(chunks).zipWithIndex.map { case (v, i) => (0L, i.toLong, v) }
+        .toDF("query_id", "qvec_id", "qvec")
+    }
     val corpus = collectionFrame(collection)
       .where(col("court_level") === targetLevel)
       .select(xxhash64(col("file_id")).as("doc_key"),
@@ -427,11 +430,26 @@ final class CaseSearchService(spark: SparkSession, root: String,
     Paths.get(root).resolve(safe).toString
   }
 
+  /** A collection's frame, reused while its [[FileStamp]] holds:
+    * `spark.read.parquet` lists the files and infers the schema with a
+    * Spark job, which would otherwise be most of a search's cost. The
+    * stamp is taken before the read, so a write that lands in between
+    * only makes the next request read again.
+    */
   private def collectionFrame(collection: String): DataFrame = {
     val p = collectionPath(collection)
     if (!Files.exists(Paths.get(p)))
       throw new IllegalArgumentException(s"collection not found: $collection")
-    spark.read.parquet(p)
+    val hp = new org.apache.hadoop.fs.Path(p)
+    val stamp = FileStamp.parquet(
+      hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp).stamp
+    val hit = frames.get(p)
+    if (hit != null && hit.stamp == stamp) hit.frame
+    else {
+      val frame = spark.read.parquet(p)
+      frames.put(p, CachedFrame(stamp, frame))
+      frame
+    }
   }
 
   private def corsHeaders(ex: HttpExchange): Unit = {
@@ -463,6 +481,8 @@ object CaseSearchService {
 
   /** Default collection name — `extract_and_embed.py:164`. */
   val DefaultCollection = "case_files"
+
+  private final case class CachedFrame(stamp: Seq[(String, Long, Long)], frame: DataFrame)
 
   private val RequestThreads = 4
   private val StopTimeoutSeconds = 10L

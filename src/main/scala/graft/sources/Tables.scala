@@ -92,21 +92,13 @@ object Tables {
   /** Footer metadata (rows + row-group count) for a parquet file or a
     * directory of part files — a few KB of footer per table, read once
     * per fixture dir, never the data. Cached per path and re-read when
-    * any part file's (name, mtime, length) changes: a directory's own
-    * mtime stays put when a part file is overwritten in place.
+    * the table's [[FileStamp]] changes.
     */
   private def scanMeta(spark: SparkSession, path: String): ScanMeta = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = hp.getFileSystem(conf)
-    val st = fs.getFileStatus(hp)
-    val files =
-      if (st.isDirectory)
-        fs.listStatus(hp).toSeq.filter(f => f.isFile &&
-          f.getPath.getName.endsWith(".parquet"))
-      else Seq(st)
-    val stamp = files.map(f =>
-      (f.getPath.getName, f.getModificationTime, f.getLen)).sortBy(_._1)
+    val FileStamp(files, stamp) = FileStamp.parquet(fs, hp)
     val key = s"${fs.getUri}$path"
     val cached = metaCache.get(key)
     if (cached != null && cached.stamp == stamp) cached

@@ -1,8 +1,15 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, Literal, SortOrder, UnsafeArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** The reference's only query shape — filtered KNN vector search plus
   * its client-side post-processing — restated as one declarative plan
@@ -23,6 +30,10 @@ import org.apache.spark.sql.functions._
   * reference silently depends on Milvus's sorted output for its dedup
   * (V4, `extract_and_search.py:113-127`); here the ordering contract is
   * explicit.
+  *
+  * The search route runs V4+V5 as one shuffle-free action,
+  * [[nearestGroups]]; the declared queries keep the declarative
+  * `topK(bestPerGroup(...))`, the form `NearestGroupsSpec` checks it against.
   */
 object Knn {
 
@@ -33,6 +44,15 @@ object Knn {
     */
   def withQueryVector(corpus: DataFrame, query: DataFrame): DataFrame =
     corpus.crossJoin(broadcast(query))
+
+  /** A driver-side vector (a query, say) as an `array<float>` literal of
+    * primitive floats. Generated code binds a literal array as one
+    * reference object, so the generated class does not depend on the
+    * value; held as `UnsafeArrayData`, it reaches each task as 4·dim
+    * bytes, where `typedLit` would serialize dim boxed floats.
+    */
+  def vectorLit(v: Array[Float]): Column = GraftColumnBridge.column(
+    Literal(UnsafeArrayData.fromPrimitiveArray(v), ArrayType(FloatType, containsNull = false)))
 
   /** Score + round. `roundTo` guards float-vs-double last-ulp drift
     * against columnar oracles while leaving ranking intact.
@@ -62,6 +82,48 @@ object Knn {
       .drop("__rn")
   }
 
+  /** [[bestPerGroup]] then [[topK]] by `group`, as one action: the k
+    * groups with the lowest best score, each as its best row (lowest
+    * (score, `tieBreak`)), ranked by (best score, `group`) — the rows
+    * `topK(bestPerGroup(scored, group, tieBreak), k, group).collect()`
+    * returns. Rows with a NULL score never rank.
+    *
+    * No shuffle, so one Spark job: the window in [[bestPerGroup]]
+    * exchanges rows by group, and under AQE that exchange runs as its
+    * own job. Here each partition keeps at most k groups with their
+    * best rows ([[BestGroups]]), and the driver merges the ≤ P×k
+    * survivors with the same step — the `TakeOrderedAndProject`
+    * pattern. A group in the global top k is in its best row's
+    * partition's local top k too (a group that outranks it there has a
+    * global best at least as good), so no survivor is missing.
+    */
+  def nearestGroups(scored: DataFrame, k: Int, group: Column,
+                    tieBreak: Column): Array[Row] = {
+    require(k >= 0, s"k must be non-negative: $k")
+    val n = scored.columns.length
+    // NULL scores are skipped here, not by a `where`: the optimizer
+    // would push that filter below the projection and score every row twice
+    val keyed = scored.select(col("*"), group.as("__group"), tieBreak.as("__tie"))
+    val types = keyed.schema.fields.map(_.dataType)
+    val s = scored.schema.fieldIndex("score")
+    // (score, tie-break) picks a group's best row, (score, group) ranks
+    // the groups; each ascending with NULLs first, as `Column.asc`
+    def asc(fields: Int*) = new InterpretedOrdering(fields.map(i =>
+      SortOrder(BoundReference(i, types(i), nullable = true), Ascending)))
+    def state() = new BestGroups[Any, InternalRow](k, _.get(n, types(n)),
+      asc(s, n + 1), asc(s, n), _.copy())
+    val survivors = keyed.queryExecution.toRdd.mapPartitions { rows =>
+      val st = state()
+      rows.foreach(r => if (!r.isNullAt(s)) st.offer(r))
+      st.ranked.iterator
+    }.collect()
+    val st = state()
+    survivors.foreach(st.offer)
+    val toRow = CatalystTypeConverters.createToScalaConverter(scored.schema)
+    st.ranked.map(r => toRow(InternalRow.fromSeq(
+      (0 until n).map(i => r.get(i, types(i))))).asInstanceOf[Row]).toArray
+  }
+
   /** Similarity join — the M×N generalization of the reference's 1×N
     * search (SURVEY §2.7): for every left row, its k nearest right rows
     * by L2. Brute force with the right side broadcast; the per-left-row
@@ -85,4 +147,45 @@ object Knn {
       .where(col("rank") <= k)
       .select(col("left_id"), col("right_id"), col("score"), col("rank"))
   }
+}
+
+/** The per-group best rows of the `k` best-ranked groups of a stream,
+  * in O(k) state: at most k groups are held at any time. `byRow` orders
+  * rows within a group (the lowest is its best), `byGroup` ranks groups
+  * by their best rows; it must break ties on the group, so two groups
+  * never compare equal. `own` copies a row that is kept (an input
+  * iterator may reuse its row objects).
+  *
+  * Exact for any arrival order: the held set is always the top k groups
+  * by their best row so far. A group outside it whose new row does not
+  * beat the k-th held group stays out, since its earlier rows ranked
+  * below that group too.
+  */
+private[vector] final class BestGroups[K, R](k: Int, key: R => K,
+    byRow: Ordering[R], byGroup: Ordering[R], own: R => R) {
+
+  private val best = mutable.HashMap.empty[K, R]
+  private val order = new java.util.TreeSet[R](byGroup)
+
+  /** Groups held now (never more than `k`). */
+  def retained: Int = best.size
+
+  def offer(r: R): Unit = {
+    val g = key(r)
+    best.get(g) match {
+      case Some(cur) =>
+        if (byRow.lt(r, cur)) { order.remove(cur); keep(own(r)) }
+      case None =>
+        if (order.size < k) keep(own(r))
+        else if (k > 0 && byGroup.lt(r, order.last)) {
+          best.remove(key(order.pollLast()))
+          keep(own(r))
+        }
+    }
+  }
+
+  private def keep(r: R): Unit = { best(key(r)) = r; order.add(r) }
+
+  /** The held best rows, best-ranked group first. */
+  def ranked: Seq[R] = order.asScala.toSeq
 }

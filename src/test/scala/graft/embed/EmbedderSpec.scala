@@ -61,6 +61,19 @@ class EmbedderSpec extends AnyFunSuite with SparkSpec {
         assert(got.map(_._2) == pinned(dim), s"$path digests: $got")
       }
     }
+
+    test(s"dim $dim vectors computed on the driver match the pinned digests") {
+      val nonNull = texts.collect { case (_, Some(t)) => t }
+      val got = DeterministicEmbedder(dim).vectors(spark, nonNull).map(v => digest(v.toSeq))
+      assert(got == pinned(dim).take(nonNull.size))
+      // the default, a local query, agrees
+      val base = DeterministicEmbedder(dim)
+      val viaQuery = new Embedder {
+        val dim: Int = base.dim
+        def embed(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = base.embed(text)
+      }
+      assert(viaQuery.vectors(spark, nonNull).map(v => digest(v.toSeq)) == got)
+    }
   }
 
   test("the embedding expression has the same size at every dimension") {

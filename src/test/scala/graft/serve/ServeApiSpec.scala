@@ -5,11 +5,17 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.api.Ingest
 import graft.embed.DeterministicEmbedder
-import graft.sources.PdfFixture
+import graft.sources.{PdfFixture, PdfTextExtractor}
+import graft.text.ChunkPacker
 
 /** End-to-end HTTP round trips against [[CaseSearchService]] — the
   * S3/X3/X4 serving surface exercised the way the reference's curl
@@ -154,6 +160,23 @@ class ServeApiSpec extends AnyFunSuite with SparkSpec {
 
   private def obj(v: Any): Map[String, Any] = v.asInstanceOf[Map[String, Any]]
   private def arr(v: Any): Vector[Any] = v.asInstanceOf[Vector[Any]]
+  private def num(v: Any): Double = v match {
+    case d: Double => d
+    case l: Long => l.toDouble
+  }
+
+  /** Search `collection` at level 3 (court_level 2 + 1) with a fixture PDF. */
+  private def searchIn(collection: String, pdf: String): HttpResponse[String] =
+    post("/api/v1/search-similar-cases", multipart(
+      Seq("court_level" -> "2", "collection" -> collection),
+      Seq(("case_file", pdf, pdfBytes(pdf)))))
+
+  /** (file_name, score) of a 200 search reply, in rank order. */
+  private def hits(r: HttpResponse[String]): Vector[(String, Double)] = {
+    assert(r.statusCode() == 200, r.body())
+    arr(obj(parseJson(r.body()))("results")).map(obj)
+      .map(h => (h("file_name").asInstanceOf[String], num(h("score"))))
+  }
 
   // ------------------------------------------------------------ //
   // X3 health + X4 CORS                                          //
@@ -363,5 +386,88 @@ class ServeApiSpec extends AnyFunSuite with SparkSpec {
       assert(threads.forall(!_.isAlive),
         s"alive after stop(): ${threads.filter(_.isAlive).map(_.getName)}")
     }
+  }
+
+  // ------------------------------------------------------------ //
+  // Per-request cost: a reused collection frame, one Spark job   //
+  // ------------------------------------------------------------ //
+
+  test("a cached collection frame follows ingests and in-place part-file rewrites") {
+    val level3 = Paths.get(root, "cache_check", "court_level=3")
+    def parts: Set[java.nio.file.Path] =
+      if (!Files.exists(level3)) Set.empty
+      else Files.list(level3).iterator().asScala.filter(_.toString.endsWith(".parquet")).toSet
+    def ingest(name: String): Unit = {
+      val r = post("/api/v1/ingest-legal-document", multipart(
+        Seq("court_level" -> "3", "collection" -> "cache_check"),
+        Seq(("file", name, pdfBytes(name)))))
+      assert(r.statusCode() == 200, r.body())
+    }
+    ingest("case_1a.pdf")
+    assert(hits(searchIn("cache_check", "case_0a.pdf")).map(_._1) == Vector("case_1a.pdf"))
+
+    // an ingest through the service: case_0b is case_0a's twin (same text)
+    val before = parts
+    ingest("case_0b.pdf")
+    val twinParts = parts -- before
+    assert(twinParts.nonEmpty)
+    assert(hits(searchIn("cache_check", "case_0a.pdf")).head == ("case_0b.pdf", 0.0))
+
+    // the same part files rewritten in place with new content and length
+    for (part <- twinParts) {
+      val tmp = Files.createTempDirectory("graft_serve_rewrite").resolve("t")
+      spark.read.parquet(part.toString).drop("court_level")
+        .withColumn("file_name", col("file_name").substr(1, 7)) // "case_0b"
+        .coalesce(1).write.parquet(tmp.toString)
+      val rewritten = Files.list(tmp).iterator().asScala
+        .find(_.toString.endsWith(".parquet")).get
+      assert(Files.size(rewritten) != Files.size(part))
+      Files.copy(rewritten, part, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
+    }
+    assert(hits(searchIn("cache_check", "case_0a.pdf")).head == ("case_0b", 0.0))
+  }
+
+  test("a warm search runs exactly one Spark job") {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val ends = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(hits(searchIn("case_files", "case_0a.pdf")).nonEmpty) // warm
+      // one client and no other work in this suite: every job started
+      // while the request runs is the request's
+      val t0 = System.currentTimeMillis()
+      val r = searchIn("case_files", "case_1a.pdf")
+      val t1 = System.currentTimeMillis()
+      assert(hits(r).nonEmpty)
+      // the listener bus delivers asynchronously; wait for it to settle
+      def jobs = starts.asScala.count(t => t >= t0 && t <= t1)
+      val deadline = t1 + 10000
+      Thread.sleep(200)
+      while ((jobs == 0 || ends.get < starts.size) && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(jobs == 1, s"$jobs Spark jobs in one search request")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a chunk without an embedding never ranks; its file ranks by its other chunks") {
+    import spark.implicits._
+    val rep = ChunkPacker.chunkText(
+      PdfTextExtractor.extract(pdfBytes("case_0a.pdf")), PdfFixture.MaxWords).head
+    val q = Seq(rep).toDF("t").select(DeterministicEmbedder(dim = 16).embed(col("t")))
+      .head().getSeq[Float](0)
+    Ingest.write(Seq(
+      (1L, "f_null", "with_null.pdf", "appellant_won", 3, null: Seq[Float]),
+      (2L, "f_null", "with_null.pdf", "appellant_won", 3, q),
+      (3L, "f_far", "far.pdf", "appellant_lost", 3, q.map(_ + 1.0f)))
+      .toDF("chunk_id", "file_id", "file_name", "case_decision", "court_level", "embedding"),
+      s"$root/null_embedding")
+    val h = hits(searchIn("null_embedding", "case_0a.pdf"))
+    assert(h.map(_._1) == Vector("with_null.pdf", "far.pdf"))
+    assert(h.head._2 == 0.0 && h(1)._2 > 0.0)
   }
 }

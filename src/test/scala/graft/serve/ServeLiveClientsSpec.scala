@@ -72,6 +72,9 @@ class ServeLiveClientsSpec extends AnyFunSuite with SparkSpec with BeforeAndAfte
     fake = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     fake.createContext("/v1/embeddings", embeddings _)
     fake.createContext("/v1/chat/completions", chat _)
+    fake.createContext("/v1/down", (ex: HttpExchange) => {
+      ex.sendResponseHeaders(503, -1); ex.close()
+    })
     fake.start()
     PdfFixture.ensure(spark)
   }
@@ -190,6 +193,24 @@ class ServeLiveClientsSpec extends AnyFunSuite with SparkSpec with BeforeAndAfte
         .filterNot(_ == "query.pdf").toSeq
       assert(resultFiles.headOption.contains("case_0a.pdf"), q.body())
       assert(q.body().contains("\"score\": 0.0"), q.body())
+    } finally svc.stop()
+  }
+
+  test("an embedding-service outage on search answers 500, not an empty ranking") {
+    val root = Files.createTempDirectory("graft_serve_live_down").toString
+    val svc = new CaseSearchService(spark, root,
+      DeterministicEmbedder(dim = 8), maxWords = PdfFixture.MaxWords,
+      remoteEmbedder = Some(HttpEmbedder.Config(
+        endpoint = s"http://127.0.0.1:$fakePort/v1/down", maxRetries = 0,
+        dropFailedBatches = true)))
+    val base = s"http://127.0.0.1:${svc.start()}"
+    try {
+      val q = post(base, "/api/v1/search-similar-cases", multipart(
+        Seq("court_level" -> "2"),
+        ("case_file", "query.pdf",
+          Files.readAllBytes(Paths.get(PdfFixture.PdfDir, "case_0b.pdf")))))
+      assert(q.statusCode() == 500, q.body())
+      assert(q.body().contains("Embedding service failed to embed the query text"), q.body())
     } finally svc.stop()
   }
 }
