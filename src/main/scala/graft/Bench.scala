@@ -17,8 +17,8 @@ object Bench {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       spark.range(100).count()
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(100)
-        .localCheckpoint()  // also warms the checkpoint/block-manager path
+      // also warms the pin/block-manager path
+      val docs = Materialize(spark.read.parquet(s"$sfDir/documents.parquet").limit(100))
       // hash + regex + groupBy + sort machinery
       docs.select(col("doc_id"),
           md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("f"),
@@ -83,8 +83,8 @@ object Bench {
     }
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Engine-state reset between measured queries. Queries that cache /
-    // localCheckpoint (dedup rounds, BPE training, pagerank) pin their
-    // blocks in the block manager for the JVM's lifetime; across ~150
+    // pin (dedup rounds, BPE training, pagerank) keep their blocks in
+    // the block manager as long as their frames live; across ~150
     // sequential queries the leaked storage squeezes execution memory
     // and the tail of the suite measures spill pressure instead of
     // query cost (observed: the same 8 queries cost 27s solo vs 109s at
@@ -114,13 +114,16 @@ object Bench {
       // graft-* temp dirs; ~150 queries of leftovers otherwise pile up
       // on the bench box's tmpfs and compete with shuffle spill for
       // page cache. Each query creates its dirs fresh, so reaping
-      // between queries is safe.
+      // between queries is safe; the context's checkpoint dir is kept.
       locally {
         val tmp = java.nio.file.Paths.get(
           System.getProperty("java.io.tmpdir"))
+        val checkpointDir = spark.sparkContext.getCheckpointDir.map(d =>
+          java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(d).toUri.getPath))
         val s = java.nio.file.Files.list(tmp)
         try s.forEach { p =>
-          if (p.getFileName.toString.startsWith(graft.TempDirs.token)) {
+          if (p.getFileName.toString.startsWith(graft.TempDirs.token) &&
+              !checkpointDir.exists(_.startsWith(p))) {
             try {
               java.nio.file.Files.walk(p)
                 .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.classify.{Cascades, CaseMetadata}
 import graft.embed.Embedder
 import graft.text.ChunkPacker
@@ -134,8 +135,9 @@ object Ingest {
     * batched HTTP client (F4's production arm,
     * `/root/reference/extract_and_embed_v2.py:352-369` fixed to one
     * RPC per batch instead of one per chunk): chunk rows are pinned
-    * first (`localCheckpoint` — `monotonically_increasing_id` must not
-    * re-evaluate between the embed pass and the join-back), the client
+    * first with a reliable checkpoint (`monotonically_increasing_id`
+    * must not renumber them between the embed pass and the join-back,
+    * not even after a lost executor), the client
     * embeds (chunk_id, text) per-partition-batch, and the vectors
     * equi-join back on chunk_id. With `cfg.dropFailedBatches`, chunks
     * whose batch exhausted retries drop out of the table — the
@@ -144,7 +146,7 @@ object Ingest {
   def chunkTableRemote(spark: SparkSession, attrs: DataFrame,
                        cfg: graft.embed.HttpEmbedder.Config,
                        maxWords: Int = 400): DataFrame = {
-    val base = withChunkId(chunkRows(attrs, maxWords, None)).localCheckpoint()
+    val base = Materialize.reliably(withChunkId(chunkRows(attrs, maxWords, None)))
     val vecs = graft.embed.HttpEmbedder.embed(spark, base, "chunk_id", "text", cfg)
     // embedding back in its chunk-table place, right after chunk_id, text
     base.join(vecs, "chunk_id")

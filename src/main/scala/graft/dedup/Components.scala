@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Connected components over a near-duplicate pair graph — the step
   * every dedup pipeline needs AFTER pair generation: pairs chain
   * (A≈B, B≈C but A̸≈C), so "drop one of each pair" over-deletes and
@@ -51,8 +53,8 @@ object Components {
     // Materialize the edge set ONCE, before symmetrizing: edge mining
     // is typically the expensive part (a similarity join), and a
     // union's two branches would otherwise each recompute it. The
-    // checkpoint also provides the count that picks the route.
-    val e0 = edges.select(col("id_a"), col("id_b")).localCheckpoint()
+    // pin also provides the count that picks the route.
+    val e0 = Materialize(edges.select(col("id_a"), col("id_b")))
     // long ids only: a cast would change the output schema vs the
     // distributed route (which preserves the id type)
     val longIds = e0.schema.fields.forall(
@@ -61,73 +63,61 @@ object Components {
       val spark = nodes.sparkSession
       import spark.implicits._
       val pairs = e0.as[(Long, Long)].collect()
-      org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(e0)
+      Materialize.release(e0)
       val lblDf = unionFindMinLabels(pairs).toSeq.toDF("id", "__cc_label")
       return nodes.select(col("id"))
         .join(broadcast(lblDf), Seq("id"), "left")
         .select(col("id"),
           coalesce(col("__cc_label"), col("id")).as("component"))
     }
-    // localCheckpoint per round: an iterative dataframe loop otherwise
-    // DOUBLES its logical plan every round (labels appears in both the
-    // join and the convergence check) — planning itself OOMs long
-    // before the data does. Checkpointing truncates lineage to the
-    // materialized partitions, keeping round N's plan size constant.
-    // sym is a cheap narrow union over the checkpointed e0; it is
-    // recomputed per round from e0's blocks, never from the mining plan.
+    // one pin per round: an iterative dataframe loop otherwise DOUBLES
+    // its logical plan every round (labels appears in both the join
+    // and the convergence check). sym is a cheap narrow union,
+    // recomputed per round from e0's blocks.
     val sym = e0.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionAll(e0.select(col("id_b").as("src"), col("id_a").as("dst")))
     // seed labels over nodes ∪ endpoints: propagation must pass
     // THROUGH endpoints absent from `nodes` (the union-find route
     // does so by construction; without this the routes would diverge)
-    var labels = nodes.select(col("id"))
+    var labels = Materialize(nodes.select(col("id"))
       .unionAll(e0.select(col("id_a").as("id")))
       .unionAll(e0.select(col("id_b").as("id")))
       .distinct()
-      .select(col("id"), col("id").as("component"))
-      .localCheckpoint()
-    // superseded checkpoints must be dropped as we go: each round's
-    // blocks otherwise stay in the block manager for the session's
-    // lifetime (storage leak ∝ rounds × labels), starving later jobs
-    var retired = List.empty[DataFrame]
+      .select(col("id"), col("id").as("component")))
     var converged = false
     var it = 0
     while (!converged && it < maxIters) {
       // each node adopts the min label among itself and its neighbors;
       // the `changed` flag rides along so convergence is a count over
-      // the already-materialized checkpoint, not an extra join
+      // the already-materialized pin, not an extra join
       val fromNeighbors = sym
         .join(labels.withColumnRenamed("id", "dst")
           .withColumnRenamed("component", "n_component"), "dst")
         .groupBy(col("src").as("id"))
         .agg(min("n_component").as("n_component"))
-      val next = labels.join(fromNeighbors, Seq("id"), "left")
+      val next = Materialize(labels.join(fromNeighbors, Seq("id"), "left")
         .select(col("id"),
           least(col("component"),
             coalesce(col("n_component"), col("component"))).as("component"),
-          (col("n_component") < col("component")).as("changed"))
-        .localCheckpoint(eager = false)
-      // ONE job per round: the full-scan count() both materializes the
-      // lazy checkpoint (every partition computes → persists; lineage
-      // truncates at job end) and decides convergence — an eager
-      // checkpoint plus a separate isEmpty would run two jobs
+          (col("n_component") < col("component")).as("changed")),
+        eager = false)
+      // ONE job per round: the count both computes the lazy pin and
+      // decides convergence
       converged = next.where(col("changed")).count() == 0L
-      // next is materialized; the previous round's blocks can go now
-      retired.foreach(org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint)
-      retired = List(labels)
+      // release the superseded round: its blocks would otherwise stay
+      // as long as the result's lineage (∝ rounds × labels)
+      Materialize.release(labels)
       labels = next.select("id", "component")
       it += 1
     }
-    org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(e0)
-    retired.foreach(org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint)
+    Materialize.release(e0)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds " +
           "(graph diameter exceeds the bound); raise maxIters")
-    // the returned frame is backed by the FINAL round's checkpoint
-    // only — bounded, and still readable by the caller. Restrict the
-    // output to `nodes` (implicit endpoints carried labels internally
-    // but are not part of the caller's vertex set).
+    // backed by the FINAL round's pin only, which the caller releases.
+    // Restrict the output to `nodes` (implicit endpoints carried labels
+    // internally but are not part of the caller's vertex set).
     labels.join(nodes.select(col("id")), Seq("id"), "left_semi")
   }
 
@@ -184,23 +174,27 @@ object Components {
                             maxIters: Int = 20): DataFrame =
     incrementalPlan(prevLabels, deltaEdges, maxIters)._1
 
-  /** [[incrementalComponents]], materialized: returns the new labels
-    * as an eager checkpoint and reclaims every intermediate checkpoint
-    * the fold created (the contracted edge set; the contracted
-    * propagation's backing blocks). The per-batch building block for
-    * [[graft.streaming.ClusterMaintainer]] — repeated folds leave
-    * exactly one labels table cached, regardless of batch count.
+  /** [[incrementalComponents]], materialized: the new labels pinned and
+    * the fold's own pins (the contracted edge set, the contracted
+    * propagation) released, so repeated folds keep one labels table.
     */
   def foldInto(prevLabels: DataFrame, deltaEdges: DataFrame,
-               maxIters: Int = 20): DataFrame = {
+               maxIters: Int = 20): DataFrame =
+    fold(prevLabels, deltaEdges, maxIters, Materialize(_))
+
+  /** [[foldInto]], pinning with `pin`: [[Materialize.reliably]] for
+    * [[graft.streaming.ClusterMaintainer]], which folds without bound.
+    */
+  private[graft] def fold(prevLabels: DataFrame, deltaEdges: DataFrame,
+                          maxIters: Int, pin: DataFrame => DataFrame): DataFrame = {
     val (res, temps) = incrementalPlan(prevLabels, deltaEdges, maxIters)
-    val out = res.localCheckpoint()
-    temps.foreach(org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint)
+    val out = pin(res)
+    Materialize.release(temps: _*)
     out
   }
 
-  /** Shared fold plan: (result, intermediate checkpointed frames the
-    * caller may reclaim once the result is materialized).
+  /** Shared fold plan: (result, pinned intermediates to release once the
+    * result is materialized).
     */
   private def incrementalPlan(prevLabels: DataFrame,
                               deltaEdges: DataFrame,
@@ -208,18 +202,17 @@ object Components {
     val prev = prevLabels.select(col("id"), col("component"))
     // map each delta endpoint to its super-node: its previous
     // component, or itself when the node is new
-    // checkpointed: the contracted edge set is referenced by the node
+    // pinned: the contracted edge set is referenced by the node
     // derivation, the propagation, and (via relabel) two downstream
     // joins — without it each reference re-runs the prev-label joins.
     // Delta-sized by construction.
-    val e = deltaEdges
+    val e = Materialize(deltaEdges
       .join(prev.select(col("id").as("id_a"), col("component").as("ca")),
         Seq("id_a"), "left")
       .join(prev.select(col("id").as("id_b"), col("component").as("cb")),
         Seq("id_b"), "left")
       .select(coalesce(col("ca"), col("id_a")).as("id_a"),
-        coalesce(col("cb"), col("id_b")).as("id_b"))
-      .localCheckpoint()
+        coalesce(col("cb"), col("id_b")).as("id_b")))
     val contractedEdges = e.where(col("id_a") =!= col("id_b"))
     val contractedNodes = e.select(col("id_a").as("id"))
       .unionAll(e.select(col("id_b").as("id"))).distinct()
@@ -239,9 +232,9 @@ object Components {
       .join(broadcast(relabel.select(col("component").as("id"), col("merged"))),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("merged"), col("id")).as("component"))
-    // reclaimables: e's checkpoint, plus whatever backs the contracted
+    // releasables: e's pin, plus whatever backs the contracted
     // propagation result (its plan reaches e and, on the distributed
-    // route, its own final-round checkpoint)
+    // route, its own final-round pin)
     (updatedOld.unionAll(newNodes), List(e, ccLabels))
   }
 
@@ -282,13 +275,13 @@ object Components {
 
   def dupClusters(corpus: DataFrame, idCol: Column, textCol: Column,
                   minJaccard: Double = 0.5): DataFrame = {
-    // checkpoint the mined pairs HERE: both the node derivation below
-    // and connectedComponents reference the edge frame more than once,
-    // and each un-checkpointed reference would re-run the similarity
-    // join. The checkpoint is edge-sized and lives until the session
-    // drops it — the price of making the result frame reusable.
-    val edges = Dedup.ngramJaccardPairsPrefix(corpus, idCol, textCol,
-      minJaccard = minJaccard).select("id_a", "id_b").localCheckpoint()
+    // pin the mined pairs HERE: both the node derivation below and
+    // connectedComponents reference the edge frame more than once, and
+    // each unpinned reference would re-run the similarity join. The
+    // pin is edge-sized and the result's plan reads it, so releasing
+    // the result releases it too.
+    val edges = Materialize(Dedup.ngramJaccardPairsPrefix(corpus, idCol, textCol,
+      minJaccard = minJaccard).select("id_a", "id_b"))
     val nodes = edges.select(col("id_a").as("id"))
       .unionAll(edges.select(col("id_b").as("id"))).distinct()
     connectedComponents(nodes, edges)

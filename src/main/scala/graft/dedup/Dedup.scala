@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.text.TextAnalysis
 
 /** Deduplication operators for training-data pipelines — the core
@@ -179,9 +180,8 @@ object Dedup {
     // frame is (id, shingles, sig) — far smaller than the corpus text,
     // and the materialize-once plan is also the correct one at scale
     // (recomputing signatures 4× reads the corpus 4×).
-    val base = df.select(idCol.as("id"), shingleHashes(textCol, n).as("sh"))
-      .withColumn("sig", minhashSignatureFromHashes(col("sh")))
-      .localCheckpoint()
+    val base = Materialize(df.select(idCol.as("id"), shingleHashes(textCol, n).as("sh"))
+      .withColumn("sig", minhashSignatureFromHashes(col("sh"))))
     val exploded = base
       .select(col("id"),
         explode(ShingleKernel.bandHash64(col("sig"), NumBands)).as("band_key"))
@@ -212,8 +212,8 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: Column, textCol: Column,
                         n: Int = 3, minJaccard: Double = 0.5): DataFrame = {
-    val base  = df.select(idCol.as("id"), shingleHashes(textCol, n).as("sh"))
-      .localCheckpoint() // pinned: inv self-join + sizes re-read it (see minhashPairs note)
+    // pinned: inv self-join + sizes re-read it (see minhashPairs note)
+    val base  = Materialize(df.select(idCol.as("id"), shingleHashes(textCol, n).as("sh")))
     val sizes = base.select(col("id"), size(col("sh")).as("n_sh"))
     val inv   = base.select(col("id"), explode(col("sh")).as("shingle"))
     val shared = inv.as("l")
@@ -292,8 +292,8 @@ object Dedup {
     */
   def ngramJaccardPairsPrefix(df: DataFrame, idCol: Column, textCol: Column,
                               n: Int = 3, minJaccard: Double = 0.5): DataFrame = {
-    val base = df.select(idCol.as("id"), shingleHashes(textCol, n).as("sh"))
-      .localCheckpoint() // pinned: inverted index + both verify fetches (see minhashPairs note)
+    // pinned: inverted index + both verify fetches (see minhashPairs note)
+    val base = Materialize(df.select(idCol.as("id"), shingleHashes(textCol, n).as("sh")))
     val inv  = base.select(col("id"), size(col("sh")).as("n_sh"),
       explode(col("sh")).as("shingle"))
     val freq = inv.groupBy("shingle").agg(count(lit(1)).as("df"))
@@ -338,8 +338,8 @@ object Dedup {
   def ngramJaccardPairsDfCut(df: DataFrame, idCol: Column, textCol: Column,
                              n: Int = 3, minJaccard: Double = 0.5,
                              maxDf: Long = 1000L): DataFrame = {
-    val base = df.select(idCol.as("id"), shingleHashes(textCol, n).as("sh"))
-      .localCheckpoint() // pinned: candidates + both verify fetches (see minhashPairs note)
+    // pinned: candidates + both verify fetches (see minhashPairs note)
+    val base = Materialize(df.select(idCol.as("id"), shingleHashes(textCol, n).as("sh")))
     val cands = dfCutCandidates(base, maxDf)
     cands
       .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
@@ -504,8 +504,8 @@ object Dedup {
     require(minContainment > 0.0 && minContainment <= 1.0,
       s"minContainment must be in (0, 1], got $minContainment")
     def floor4(c: Column): Column = floor(c * 10000.0) / 10000.0
-    val base  = df.select(idCol.as("id"), shingleHashes(textCol, n).as("sh"))
-      .localCheckpoint() // pinned: inv self-join + both size fetches (see minhashPairs note)
+    // pinned: inv self-join + both size fetches (see minhashPairs note)
+    val base  = Materialize(df.select(idCol.as("id"), shingleHashes(textCol, n).as("sh")))
     val sizes = base.select(col("id"), size(col("sh")).as("n_sh"))
     val inv   = base.select(col("id"), explode(col("sh")).as("shingle"))
     inv.as("l")

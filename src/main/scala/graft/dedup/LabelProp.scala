@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Synchronous label propagation over a near-duplicate pair graph —
   * the COMMUNITY view that complements [[Components]]' connectivity
   * view: connected components glue everything a chain of weak bridges
@@ -28,8 +30,8 @@ import org.apache.spark.sql.functions._
   * against the (node, label) frame, one (src, label) count aggregate
   * (map-side partial), one max_by argmax per node — bounded by degree,
   * never corpus-wide — and a left join back to the node frame.
-  * Labels are localCheckpoint'ed each round (the [[graft.operators.PageRank]]
-  * cadence) so lineage stays flat at any round count.
+  * Labels are pinned on a cadence (the [[graft.operators.PageRank]]
+  * shape) so the plan stays flat at any round count.
   */
 object LabelProp {
 
@@ -38,22 +40,22 @@ object LabelProp {
     * Isolated nodes keep their own id. Returns (id, community).
     *
     * Each round's labels feed exactly ONE consumer (the next round's
-    * vote join), so per-round materialization buys nothing — the
-    * checkpoint exists only to keep lineage flat at deep round counts.
-    * Materialize at a cadence instead (the [[graft.operators.PageRank]]
-    * `checkpointEvery` shape): between checkpoints the rounds unroll
-    * lazily into one plan and execute once, and superseded checkpoint
-    * blocks are dropped as soon as the next lands (they are otherwise
-    * pinned in the block manager for the session's lifetime).
+    * vote join), so per-round materialization buys nothing — the pin
+    * exists only to keep the plan flat at deep round counts. Pin at a
+    * cadence instead (the [[graft.operators.PageRank]]
+    * `checkpointEvery` shape): between pins the rounds unroll lazily
+    * into one plan and execute once, and a superseded pin is released
+    * as soon as the next lands (its blocks otherwise stay in the block
+    * manager as long as the result's lineage).
     */
   def labelPropagation(nodes: DataFrame, edges: DataFrame,
                        rounds: Int = 4, checkpointEvery: Int = 2): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val e0 = edges.select(col("id_a"), col("id_b")).localCheckpoint()
+    val e0 = Materialize(edges.select(col("id_a"), col("id_b")))
     val sym = e0.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(e0.select(col("id_b").as("src"), col("id_a").as("dst")))
-    val n0 = nodes.select(col("id")).localCheckpoint()
+    val n0 = Materialize(nodes.select(col("id")))
     var labels = n0.select(col("id"), col("id").as("lbl"))
     var prevCkpt: Option[DataFrame] = None
     for (t <- 1 to rounds) {
@@ -68,9 +70,8 @@ object LabelProp {
         .join(winners.select(col("src").as("id"), col("w")), Seq("id"), "left")
         .select(col("id"), coalesce(col("w"), col("id")).as("lbl"))
       if (t % checkpointEvery == 0 && t < rounds) {
-        val ck = labels.localCheckpoint() // eager: materialized now
-        prevCkpt.foreach(
-          org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint)
+        val ck = Materialize(labels) // eager: materialized now
+        prevCkpt.foreach(Materialize.release(_))
         prevCkpt = Some(ck)
         labels = ck
       }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Exact duplicated-substring SPAN extraction — the sequence-level
   * dedup of Lee et al., "Deduplicating Training Data Makes Language
   * Models Better" (ACL 2022): find every maximal run of >= `minTokens`
@@ -75,10 +77,8 @@ object Spans {
       val h = seeds.withColumn("h", xxhash64(col("gram")))
       val dupH = h.groupBy("h").agg(count(lit(1)).as("occ"))
         .where(col("occ") >= 2).select("h")
-      // no checkpoint: the count build side and the join probe side
-      // share one exchange via ReusedExchange, and downstream consumers
-      // reuse the same subtree — measured faster than an eager
-      // localCheckpoint across both the find and apply gates
+      // no pin: the count build side and the join probe side share one
+      // exchange via ReusedExchange — measured faster than an eager pin
       h.join(dupH, "h").select("doc_id", "pos", "gram")
     }
 
@@ -193,9 +193,8 @@ object Spans {
         min(struct(col("doc_id"), col("pos"))).as("w"))
       .where(col("occ") >= 2)
       .select(col("gram"), col("w.doc_id").as("wdoc"), col("w.pos").as("wpos"))
-      // no checkpoint: the two consumers (loser join, winner intervals)
-      // share the election's exchange via ReusedExchange — measured
-      // faster than an eager localCheckpoint, which breaks that reuse
+      // no pin: the two consumers (loser join, winner intervals) share
+      // the election's exchange via ReusedExchange, which a pin breaks
     val losers = seeds.join(winners, "gram")
       .where(!(col("doc_id") === col("wdoc") && col("pos") === col("wpos")))
       .select(col("doc_id"), col("pos"))
@@ -248,10 +247,8 @@ object Spans {
     * pushed set; the screen can never change the answer.
     *
     * @return (clipped batch, new registry rows, release) — `release`
-    *         unpersists the step's two pinned localCheckpoints; call
-    *         it after BOTH output actions (emit + registry append)
-    *         complete, or a long-running stream accretes checkpoint
-    *         blocks until their RDDs happen to be GC'd.
+    *         releases the step's two pins; call it after BOTH output
+    *         actions (emit + registry append) complete.
     */
   def clipSpansPrefixStep(df: DataFrame, idCol: Column, textCol: Column,
                           registry: DataFrame, minTokens: Int,
@@ -276,8 +273,8 @@ object Spans {
       split(trim(textCol), "\\s+").as("t"))
     // batch-sized and consumed by four branches (registry probe, fresh
     // election, losers, new-gram append) — pin it once
-    val seeds = seedsOf(toks, n, hashGrams = false)
-      .withColumn("h", xxhash64(col("gram"))).localCheckpoint()
+    val seeds = Materialize(seedsOf(toks, n, hashGrams = false)
+      .withColumn("h", xxhash64(col("gram"))))
     // screen fast path: probe the pinned batch seeds' 8-byte hashes
     // through the screen (no false negatives) and keep the POSITIVE
     // set — bounded by true hits + fpp × batch, never by registry
@@ -309,8 +306,7 @@ object Spans {
     // append), and without this the REGISTRY — the one input that
     // grows for the life of the stream — would be scanned and
     // anti-joined twice per batch
-    val fresh = seeds.join(reg, Seq("h", "gram"), "left_anti")
-      .localCheckpoint()
+    val fresh = Materialize(seeds.join(reg, Seq("h", "gram"), "left_anti"))
     val winners = fresh.groupBy("gram")
       .agg(count(lit(1)).as("occ"),
         min(struct(col("doc_id"), col("pos"))).as("w"))
@@ -330,8 +326,7 @@ object Spans {
     val winIv = intervalsOf(protWin, n).withColumnRenamed("iv", "wiv")
     (applyIntervals(toks, lossIv, Some(winIv)),
       fresh.select("h", "gram").distinct(),
-      () => Seq(seeds, fresh).foreach(
-        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint))
+      () => Materialize.release(seeds, fresh))
   }
 
   /** DuckDB twin of the [[clipSpansPrefixStep]] STREAM over a full
@@ -345,12 +340,7 @@ object Spans {
     s"""WITH toks AS (
        |  SELECT CAST($idExpr AS BIGINT) AS doc_id, $textExpr AS orig,
        |    string_split_regex(trim($textExpr), '\\s+') AS t FROM $table),
-       |seeds AS (
-       |  SELECT doc_id, i AS pos,
-       |    array_to_string(list_slice(t, i, i + ${n - 1}), ' ') AS gram
-       |  FROM (SELECT doc_id, t,
-       |          unnest(range(1, greatest(len(t) - ${n - 1}, 0) + 1)) AS i
-       |        FROM toks)),
+       |${seedsSql(n)}
        |ranked AS (
        |  SELECT gram, doc_id, pos,
        |    count(*) OVER (PARTITION BY gram) AS occ,
@@ -460,6 +450,15 @@ object Spans {
     applyIntervals(toks, intervalsOf(contaminated, n), None)
   }
 
+  /** The twins' `seeds` CTE: every n-gram of `toks.t` at its 1-based position. */
+  private def seedsSql(n: Int): String =
+    s"""seeds AS (
+       |  SELECT doc_id, i AS pos,
+       |    array_to_string(list_slice(t, i, i + ${n - 1}), ' ') AS gram
+       |  FROM (SELECT doc_id, t,
+       |          unnest(range(1, greatest(len(t) - ${n - 1}, 0) + 1)) AS i
+       |        FROM toks)),""".stripMargin
+
   /** Island fold as a DuckDB subquery: merged `[pos, pos+n-1]`
     * interval union per doc over `src`'s (doc_id, pos) rows.
     */
@@ -515,12 +514,7 @@ object Spans {
        |  SELECT CAST($idExpr AS BIGINT) AS doc_id, $textExpr AS orig,
        |    string_split_regex(trim($textExpr), '\\s+') AS t
        |  FROM $trainTable WHERE $trainWhere),
-       |seeds AS (
-       |  SELECT doc_id, i AS pos,
-       |    array_to_string(list_slice(t, i, i + ${n - 1}), ' ') AS gram
-       |  FROM (SELECT doc_id, t,
-       |          unnest(range(1, greatest(len(t) - ${n - 1}, 0) + 1)) AS i
-       |        FROM toks)),
+       |${seedsSql(n)}
        |bgrams AS (
        |  SELECT DISTINCT array_to_string(list_slice(t, i, i + ${n - 1}), ' ')
        |    AS gram
@@ -545,12 +539,7 @@ object Spans {
     s"""WITH toks AS (
        |  SELECT CAST($idExpr AS BIGINT) AS doc_id, $textExpr AS orig,
        |    string_split_regex(trim($textExpr), '\\s+') AS t FROM $table),
-       |seeds AS (
-       |  SELECT doc_id, i AS pos,
-       |    array_to_string(list_slice(t, i, i + ${n - 1}), ' ') AS gram
-       |  FROM (SELECT doc_id, t,
-       |          unnest(range(1, greatest(len(t) - ${n - 1}, 0) + 1)) AS i
-       |        FROM toks)),
+       |${seedsSql(n)}
        |win AS (
        |  SELECT gram, doc_id AS wdoc, pos AS wpos FROM (
        |    SELECT gram, doc_id, pos,
@@ -575,12 +564,7 @@ object Spans {
     s"""WITH toks AS (
        |  SELECT CAST($idExpr AS BIGINT) AS doc_id,
        |    string_split_regex(trim($textExpr), '\\s+') AS t FROM $table),
-       |seeds AS (
-       |  SELECT doc_id, i AS pos,
-       |    array_to_string(list_slice(t, i, i + ${n - 1}), ' ') AS gram
-       |  FROM (SELECT doc_id, t,
-       |          unnest(range(1, greatest(len(t) - ${n - 1}, 0) + 1)) AS i
-       |        FROM toks)),
+       |${seedsSql(n)}
        |dup AS (
        |  SELECT doc_id, pos FROM (
        |    SELECT doc_id, pos, count(*) OVER (PARTITION BY gram) AS occ

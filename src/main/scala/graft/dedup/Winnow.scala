@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Winnowing document fingerprints — Schleimer, Wilkerson & Aiken,
   * "Winnowing: Local Algorithms for Document Fingerprinting" (SIGMOD
   * 2003; the MOSS algorithm): hash every token k-gram, then in each
@@ -85,7 +87,7 @@ object Winnow {
                         k: Int, w: Int, minScore: Double,
                         maxDf: Int = 1000): DataFrame =
     pairsFromFingerprints(
-      fingerprintsHashed(df, idCol, textCol, k, w).localCheckpoint(),
+      Materialize(fingerprintsHashed(df, idCol, textCol, k, w)),
       minScore, maxDf)
 
   /** Document pairs ranked by shared winnowing fingerprints:
@@ -99,7 +101,7 @@ object Winnow {
                   k: Int, w: Int, minScore: Double,
                   maxDf: Int = 1000): DataFrame =
     pairsFromFingerprints(
-      fingerprints(df, idCol, textCol, k, w).localCheckpoint(),
+      Materialize(fingerprints(df, idCol, textCol, k, w)),
       minScore, maxDf)
 
   /** Shared pairing tail: df-cut (groupBy + equi-join, partial-

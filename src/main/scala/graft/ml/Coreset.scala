@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.vector.Distance
 
 /** Coreset / diversity selection over an embedding corpus — k-center
@@ -23,7 +24,7 @@ import graft.vector.Distance
   * take the global argmax with a 1-row TakeOrdered. Cost is k narrow
   * scans + k tiny reductions — never the k·n² of recomputing
   * min-over-chosen per round, no shuffle at all (the argmax is a
-  * reduction). `localCheckpoint` per round caps lineage. At 100 TB the
+  * reduction). A pin per round keeps the plan flat. At 100 TB the
   * k scans are the algorithm's real cost and stream at IO speed; the
   * standard practice for huge corpora — run the greedy over a
   * cluster-stratified sample — composes from [[graft.vector.Ann]]'s
@@ -45,16 +46,16 @@ object Coreset {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val pts = corpus.select(idCol.cast("long").as("id"),
-      embCol.cast("array<float>").as("e")).localCheckpoint()
+    val pts = Materialize(corpus.select(idCol.cast("long").as("id"),
+      embCol.cast("array<float>").as("e")))
     val seed = pts.orderBy("id").limit(1).collect()
     require(seed.nonEmpty, "corpus is empty")
     val seedId = seed(0).getLong(0)
     val seedE = seed(0).getSeq[Float](1)
     var chosen = List((1, seedId, 0.0))
     var chosenIds = Set(seedId)
-    var state = pts.withColumn("mind",
-      round(Distance.l2(col("e"), typedLit(seedE)), 4)).localCheckpoint()
+    var state = Materialize(pts.withColumn("mind",
+      round(Distance.l2(col("e"), typedLit(seedE)), 4)))
     var step = 2
     while (step <= k) {
       val win = state.where(!col("id").isInCollection(chosenIds))
@@ -67,12 +68,15 @@ object Coreset {
           (win(0).getLong(0), win(0).getDouble(1), win(0).getSeq[Float](2))
         chosen ::= ((step, wid, wmind))
         chosenIds += wid
-        state = state.withColumn("mind",
-          least(col("mind"), round(Distance.l2(col("e"), typedLit(we)), 4)))
-          .localCheckpoint()
+        // the superseded round is no longer read: release it
+        val next = Materialize(state.withColumn("mind",
+          least(col("mind"), round(Distance.l2(col("e"), typedLit(we)), 4))))
+        Materialize.release(state)
+        state = next
         step += 1
       }
     }
+    Materialize.release(pts, state)
     chosen.reverse.toDF("step", "id", "dist")
   }
 

@@ -3,8 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
+import graft.Materialize
 import graft.text.TextAnalysis
 
 /** In-engine quality-classifier training — the model-based filter step
@@ -120,9 +120,7 @@ object LinearClassifier {
                    nCharsCol: Column, labelCol: Column, iters: Int = 15,
                    lr: Double = 1.0): DataFrame = {
     val spark = docs.sparkSession
-    val feats = docs.select(idCol.as("id"),
-      docFeatures(textCol, nCharsCol).as("fq"),
-      labelCol.cast("long").as("y")).persist(StorageLevel.MEMORY_AND_DISK)
+    val feats = features(docs, idCol, textCol, nCharsCol, labelCol)
     try {
       val w = trainInts(feats, d = 5, iters, lr)
       val schema = StructType(Seq(
@@ -132,8 +130,14 @@ object LinearClassifier {
         spark.sparkContext.parallelize(
           w.toSeq.zipWithIndex.map { case (wi, i) => Row(i + 1, wi / 1e6d) }, 1),
         schema)
-    } finally { feats.unpersist() }
+    } finally Materialize.release(feats)
   }
+
+  /** (id, fq, y), pinned at the first training round: every round reads it. */
+  private def features(docs: DataFrame, idCol: Column, textCol: Column,
+                       nCharsCol: Column, labelCol: Column): DataFrame =
+    Materialize(docs.select(idCol.as("id"), docFeatures(textCol, nCharsCol).as("fq"),
+      labelCol.cast("long").as("y")), eager = false)
 
   /** Corpus-scale apply: score every document with the trained model —
     * a narrow map (exact integer dot against the broadcast weights,
@@ -142,18 +146,16 @@ object LinearClassifier {
   def scoreDocs(docs: DataFrame, idCol: Column, textCol: Column,
                 nCharsCol: Column, labelCol: Column, iters: Int = 15,
                 lr: Double = 1.0): DataFrame = {
-    val feats = docs.select(idCol.as("id"),
-      docFeatures(textCol, nCharsCol).as("fq"),
-      labelCol.cast("long").as("y")).persist(StorageLevel.MEMORY_AND_DISK)
+    val feats = features(docs, idCol, textCol, nCharsCol, labelCol)
     try {
       val w = trainInts(feats, d = 5, iters, lr)
       val wLit = array(w.map(lit): _*)
       val dotInt = aggregate(zip_with(col("fq"), wLit, (f, wi) => f * wi),
         lit(0L), (a, x) => a + x)
-      feats.select(col("id"), hardSigmoid(dotInt).as("score"),
-        (dotInt >= 0L).as("pred"), col("y"))
-        .localCheckpoint(true) // sever from the persisted feats before unpersist
-    } finally { feats.unpersist() }
+      // pinned: the scores stay in blocks after feats is released
+      Materialize(feats.select(col("id"), hardSigmoid(dotInt).as("score"),
+        (dotInt >= 0L).as("pred"), col("y")))
+    } finally Materialize.release(feats)
   }
 
   // ---- DuckDB twins ---------------------------------------------------

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Deterministic PageRank over an undirected edge set — graph
   * centrality for duplicate/similarity graphs (which document is the
   * HUB of a template family; which node best represents a cluster).
@@ -28,12 +30,12 @@ import org.apache.spark.sql.functions._
   * edge list with the current ranks (shuffle on src) and one partial
   * aggregation onto dst — the standard distributed PageRank step.
   * The degree join is folded into the edge list ONCE up front and
-  * `localCheckpoint`ed: it is read `iters` times, and each read would
-  * otherwise re-run the (possibly expensive) edge-mining plan; the
-  * checkpoint also truncates the growing per-iteration lineage at its
-  * root. `ranks` itself is checkpointed every `checkpointEvery`
-  * rounds (and the previous rank checkpoint's blocks dropped), so the
-  * join-agg lineage never grows past the cadence — deep iteration
+  * pinned ([[graft.Materialize]]): it is read `iters` times, and each
+  * read would otherwise re-run the (possibly expensive) edge-mining
+  * plan; the pin is also one plan leaf, so the per-iteration plan
+  * starts there. `ranks` itself is pinned every `checkpointEvery`
+  * rounds (and the previous rank pin released), so the join-agg plan
+  * never grows past the cadence — deep iteration
   * counts run at flat per-round cost instead of re-planning an
   * ever-taller tree.
   */
@@ -53,12 +55,12 @@ object PageRank {
     // the degree aggregate and the symDeg join, and edge mining (a
     // similarity join upstream) would otherwise re-run once per
     // reference — measured 11.1s -> 6.8s on the near-dup graph at sf0.1
-    val e0 = edges.select(col("id_a"), col("id_b")).localCheckpoint()
+    val e0 = Materialize(edges.select(col("id_a"), col("id_b")))
     val sym = e0.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionAll(e0.select(col("id_b").as("src"), col("id_a").as("dst")))
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
     // materialize (src, dst, deg) once; re-read per iteration
-    val symDeg = sym.join(deg, "src").localCheckpoint()
+    val symDeg = Materialize(sym.join(deg, "src"))
     var ranks = deg.select(col("src").as("id"), lit(1000000L).as("rank"))
     var prevCkpt: Option[DataFrame] = None
     for (t <- 1 to iters) {
@@ -70,15 +72,15 @@ object PageRank {
         .agg((lit(150000L) + sum(col("contrib"))).as("rank"))
         .select(col("dst").as("id"), col("rank"))
       if (t % checkpointEvery == 0 && t < iters) {
-        val ck = ranks.localCheckpoint() // eager: materialized now
-        // the previous rank checkpoint can no longer be read — drop
-        // its blocks instead of holding every cadence's ranks in the
-        // block manager for the session's lifetime
-        prevCkpt.foreach(org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint)
+        val ck = Materialize(ranks) // eager: materialized now
+        // the previous rank pin is no longer read: release its blocks
+        prevCkpt.foreach(Materialize.release(_))
         prevCkpt = Some(ck)
         ranks = ck
       }
     }
+    // past the first cadence the result no longer reads the edge pin
+    if (prevCkpt.nonEmpty) Materialize.release(e0)
     ranks
   }
 

@@ -5,8 +5,8 @@ import java.net.URI
 import java.nio.file.{FileSystems, Files}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -78,7 +78,13 @@ class GraftRawLocalFs(uri: URI, conf: Configuration)
 }
 
 /** `fs.AbstractFileSystem.file.impl`: Hadoop's `LocalFs` (a `ChecksumFs`)
-  * over [[GraftRawLocalFs]].
+  * over [[GraftRawLocalFs]], with the `.crc` checked on `open(path)`:
+  * `ChecksumFs` checks it only on `open(path, bufferSize)`, and its
+  * parent `FilterFs` sends `open(path)`, the call `FileContext.open`
+  * makes, straight to the raw file system. Spark reads streaming
+  * offsets, commits and state through `FileContext.open`.
   */
 class GraftLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new GraftRawLocalFs(uri, conf))
+    extends ChecksumFs(new GraftRawLocalFs(uri, conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
+import graft.Materialize
 import graft.dedup.Components
 
 /** Continuous duplicate-cluster maintenance: near-dup pair batches
@@ -16,10 +17,10 @@ import graft.dedup.Components
   * foreachBatch is the right harness: the labeling is cross-batch
   * mutable state of DataFrame shape — too big for the keyed state
   * store's per-key model at corpus scale, exactly right as a
-  * checkpointed DataFrame swapped per batch. Each round's labels are
-  * `localCheckpoint`ed (bounds lineage growth across unbounded
-  * batches) and the superseded round's blocks are dropped eagerly, so
-  * storage stays one labels-table regardless of stream lifetime.
+  * pinned DataFrame swapped per batch. Each round's labels are pinned
+  * [[graft.Materialize.reliably]] (the lineage ends at the previous
+  * batch's checkpoint, however long the stream) and the superseded
+  * round is released, so storage stays one labels-table.
   *
   * Replay safety: foreachBatch is at-least-once, and re-folding an
   * already-folded edge batch is structurally a NO-OP for connected
@@ -32,19 +33,19 @@ final class ClusterMaintainer(spark: SparkSession) {
   import spark.implicits._
 
   @volatile private var current: DataFrame =
-    Seq.empty[(Long, Long)].toDF("id", "component").localCheckpoint()
+    Materialize(Seq.empty[(Long, Long)].toDF("id", "component"))
 
   /** Current labeling — safe to read between batches. */
   def labels: DataFrame = current
 
   /** Fold one edge batch (columns id_a, id_b) into the labeling.
-    * [[Components.foldInto]] materializes the new labels and reclaims
-    * its own intermediates; the superseded labels drop here — only
+    * [[Components.fold]] pins the new labels and releases its own
+    * intermediates; the superseded labels are released here — only
     * the live table survives the batch.
     */
   def update(edgeBatch: DataFrame): Unit = synchronized {
-    val next = Components.foldInto(current, edgeBatch)
-    org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(current)
+    val next = Components.fold(current, edgeBatch, 20, Materialize.reliably)
+    Materialize.release(current)
     current = next
   }
 

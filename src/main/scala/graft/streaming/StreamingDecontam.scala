@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.Materialize
 import graft.text.BloomKernel
 
 /** Streaming benchmark-decontamination screen — the admission-time
@@ -96,8 +97,8 @@ object StreamingDecontam {
     // the benchmark gram table is immutable for the life of the query
     // — derive it ONCE (like the bloom filter) instead of re-exploding
     // the bench corpus inside every micro-batch
-    val benchGrams = graft.dedup.Spans
-      .benchGramsOf(bench, benchTextCol, minTokens).localCheckpoint()
+    val benchGrams = Materialize(graft.dedup.Spans
+      .benchGramsOf(bench, benchTextCol, minTokens))
     val writer = stream
       .select(idCol.cast("long").as("doc_id"),
         textCol.cast("string").as("text"))
@@ -109,11 +110,11 @@ object StreamingDecontam {
     // (StreamingResumeSpec proves both halves)
     checkpointDir.foreach(writer.option("checkpointLocation", _))
     writer.foreachBatch { (batch: DataFrame, _: Long) =>
-        val screened = batch.withColumn("__flagged",
+        // consumed 2-3x below; batch-sized
+        val screened = Materialize(batch.withColumn("__flagged",
           exists(array_distinct(
             graft.dedup.Dedup.shingles(col("text"), minTokens)),
-            s => BloomKernel.mightContainLong(xxhash64(s), filter)))
-          .localCheckpoint() // consumed 2-3x below; batch-sized
+            s => BloomKernel.mightContainLong(xxhash64(s), filter))))
         val clean = screened.where(!col("__flagged"))
           .select(col("doc_id"), col("text").as("clean_text"),
             lit(0L).as("n_removed"))

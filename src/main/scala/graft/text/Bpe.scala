@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Materialize
+
 /** Byte-pair-encoding merge training over a document corpus — the
   * tokenizer-construction step of an LLM data pipeline (Sennrich et
   * al. 2016). No reference analog (the reference consumes a hosted
@@ -63,14 +65,15 @@ object Bpe {
   def trainMerges(docs: DataFrame, textCol: Column, steps: Int,
                   checkpointEvery: Int = 16): DataFrame =
     mergeRounds(
-      wordHistogram(docs, textCol)
-        .select(wrapChars(col("word")).as("w"), col("cnt"))
-        .localCheckpoint(true), // histogram-sized; cut corpus lineage once
+      // histogram-sized; the rounds never re-read the corpus
+      Materialize(wordHistogram(docs, textCol)
+        .select(wrapChars(col("word")).as("w"), col("cnt"))),
       steps, checkpointEvery)
 
   /** The merge-round loop shared by the char and byte arms: `steps`
     * rounds of pair-count → deterministic argmax → literal replace
-    * over an already-wrapped `(w, cnt)` histogram.
+    * over an already-wrapped, pinned `(w, cnt)` histogram, which it
+    * releases with every pin of its own before returning.
     */
   private def mergeRounds(words0: DataFrame, steps: Int,
                           checkpointEvery: Int): DataFrame = {
@@ -98,12 +101,17 @@ object Bpe {
             lit(SEP + l + r + SEP)))
         // Real vocabularies need tens of thousands of rounds: cut the
         // chained-replace lineage (and re-shrink the Tungsten plan) on a
-        // fixed cadence so per-round cost stays flat instead of growing
-        // with the merge index.
-        if (step % checkpointEvery == 0) words = words.localCheckpoint(true)
+        // fixed cadence with a reliable checkpoint, so per-round cost
+        // stays flat instead of growing with the merge index.
+        if (step % checkpointEvery == 0) {
+          val ck = Materialize.reliably(words)
+          Materialize.release(words)
+          words = ck
+        }
         step += 1
       }
     }
+    Materialize.release(words0, words)
     val schema = StructType(Seq(
       StructField("step", IntegerType, nullable = false),
       StructField("left", StringType, nullable = false),
@@ -362,9 +370,8 @@ object Bpe {
   def trainMergesBytes(docs: DataFrame, textCol: Column, steps: Int,
                        checkpointEvery: Int = 16): DataFrame =
     mergeRounds(
-      byteHistogram(docs, textCol)
-        .select(wrapBytes(col("word")).as("w"), col("cnt"))
-        .localCheckpoint(true),
+      Materialize(byteHistogram(docs, textCol)
+        .select(wrapBytes(col("word")).as("w"), col("cnt"))),
       steps, checkpointEvery)
 
   /** Byte-level encode: per-doc BPE token count against a trained byte

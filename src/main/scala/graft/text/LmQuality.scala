@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Model-based quality signals for LLM training-data curation, built
   * entirely from corpus statistics — no external model weights, so the
   * whole family stays under the bit-exact DuckDB oracle gate.
@@ -109,7 +111,7 @@ object LmQuality {
     // materialize the bigram stream once: the model build (`big`) and
     // the per-occurrence costing join both consume it, and each
     // reference otherwise re-runs the tokenize+explode corpus pass
-    val occ = bigramOcc(docs, idCol, textCol).localCheckpoint()
+    val occ = Materialize(bigramOcc(docs, idCol, textCol))
     val big = occ.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     // ctx and vocab DERIVE from the distinct-bigram table: c(w1) =
     // Σ_w2 c(w1,w2) and V = |distinct w2| are identities over `big`,
@@ -239,10 +241,9 @@ object LmQuality {
                      isTarget: Column, buckets: Int = 1024): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     // materialize the feature stream once: the per-bucket stats and the
-    // per-doc weight join both consume it, and each un-checkpointed
-    // reference re-runs the sha256-per-feature hashing pass
-    val occ = featureOcc(docs, idCol, textCol, isTarget, buckets)
-      .localCheckpoint()
+    // per-doc weight join both consume it, and each unpinned reference
+    // re-runs the sha256-per-feature hashing pass
+    val occ = Materialize(featureOcc(docs, idCol, textCol, isTarget, buckets))
     val stats = occ.groupBy("bucket").agg(
       count(lit(1)).as("r_b"),
       sum(when(col("tgt"), 1L).otherwise(0L)).as("t_b"))

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.oracle.Sql
 
 /** Text-analysis operators for LLM training-data pipelines (the
@@ -400,19 +401,17 @@ object TextAnalysis {
     // tokenization is the multi-second stage: spread a narrow source
     // (one parquet file = one task) before it, and materialize the
     // inverted index ONCE — postings feed the term join, the df
-    // derivation, and nothing else re-tokenizes. The checkpoint is the
-    // index build; a production pipeline would persist it as a table.
+    // derivation, and nothing else re-tokenizes.
     val spark = docs.sparkSession
     val par = spark.sparkContext.defaultParallelism
     val src = if (docs.rdd.getNumPartitions < par) docs.repartition(par)
       else docs
     val stats = src.agg(count(lit(1)).as("n"),
       avg(size(toks).cast("long")).as("avgdl"))
-    val postings = src
+    val postings = Materialize(src
       .select(idCol.as("id"), size(toks).cast("long").as("dl"),
         explode(toks).as("token"))
-      .groupBy("id", "dl", "token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .groupBy("id", "dl", "token").agg(count(lit(1)).as("tf")))
     val dfs = postings.groupBy("token").agg(count(lit(1)).as("df"))
     scoreAndRank(postings, dfs, stats, queries, k, k1, b)
   }
@@ -715,12 +714,11 @@ object TextAnalysis {
                         element_at(t, i + 1).as("w2"))))
         .otherwise(array().cast("array<struct<w1:string,w2:string>>"))), 1)
     // materialize the bigram table ONCE: marginals, the total, and the
-    // scored join all consume it, and each un-checkpointed reference
-    // would re-run the tokenize+explode+aggregate corpus pass
-    val big = docs.select(explode(grams).as("g"))
+    // scored join all consume it, and each unpinned reference would
+    // re-run the tokenize+explode+aggregate corpus pass
+    val big = Materialize(docs.select(explode(grams).as("g"))
       .select(col("g.w1").as("w1"), col("g.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val left = big.groupBy("w1").agg(sum("c12").as("l1"))
     val right = big.groupBy("w2").agg(sum("c12").as("r2"))
     val n = big.agg(sum("c12").as("nb"))

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Unigram-LM subword tokenization (the SentencePiece-style
   * counterpart of [[Bpe]], cf. Kudo 2018): a piece VOCABULARY scored
   * by corpus substring statistics, and an ENCODE step that segments
@@ -87,7 +89,7 @@ object Unigram {
   private def vocabFromHistogram(words: DataFrame, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     // piece candidates are derived once; chars + top-k both read them
-    val cand = pieceCounts(words).localCheckpoint()
+    val cand = Materialize(pieceCounts(words))
     val sel = cand.where(length(col("piece")) === 1)
       .unionByName(cand.where(length(col("piece")) > 1)
         .orderBy(desc("cnt"), asc("piece")).limit(k))
@@ -141,12 +143,11 @@ object Unigram {
              k: Int): DataFrame = {
     // per-doc word histogram: the ONE corpus pass — vocabulary
     // training re-aggregates it instead of re-scanning the corpus
-    val wh = docs
+    val wh = Materialize(docs
       .select(idCol.as("id"),
         explode(split(lower(trim(textCol)), "\\s+")).as("word"))
       .where(col("word") =!= "")
-      .groupBy("id", "word").agg(count(lit(1)).as("wcnt"))
-      .localCheckpoint()
+      .groupBy("id", "word").agg(count(lit(1)).as("wcnt")))
     val v = vocabFromHistogram(
         wh.groupBy("word").agg(sum("wcnt").as("cnt")), k)
       .select(col("piece"), col("cost"))

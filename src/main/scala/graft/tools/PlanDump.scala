@@ -17,21 +17,9 @@ object PlanDump {
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        // when the declared query was rebuilt as checkpoint+sort the
-        // final plan is Sort→Scan ExistingRDD; append the RAW (pre-
-        // wrapper) plan so the subtree that executed once inside the
-        // localCheckpoint is visible evidence too
-        val full =
-          if (txt.contains("Scan ExistingRDD")) {
-            val raw = graft.SparkEntry.rawQueries(n)(spark, sfDir)
-              .queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode)
-            txt + "\n\n==== raw declared plan (subtree materialized once " +
-              "by localCheckpoint under the wrapper) ====\n" + raw
-          } else txt
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"${n}_$tag.txt"),
-          full.getBytes("UTF-8"))
+          txt.getBytes("UTF-8"))
         println(s"dumped $n")
       } catch { case e: Throwable =>
         println(s"FAILED $n: ${e.getMessage}")

@@ -3,6 +3,8 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Corpus-level embedding statistics — mean, covariance, top principal
   * component — the "what does my vector corpus look like" layer a
   * training-data pipeline runs before whitening, outlier pruning, or
@@ -552,9 +554,9 @@ object EmbStats extends Serializable {
                                     k: Int, iters: Int, scale: Int)
       : (Array[Array[Long]], Array[Long], Double) = {
     require(k > 0 && k <= dim, "k must be in 1..dim")
-    val qdf = df.where(embCol.isNotNull && size(embCol) === dim)
-      .select(quantized(embCol, scale).as("__qe"))
-      .localCheckpoint() // two passes below; quantize the corpus once
+    // two passes below; quantize the corpus once
+    val qdf = Materialize(df.where(embCol.isNotNull && size(embCol) === dim)
+      .select(quantized(embCol, scale).as("__qe")))
     val bufRow = qdf
       .select(col("__qe"), signProjectInts(col("__qe"), dim, k).as("__yq"))
       .agg(CrossMomentAgg.crossMomentSums(

@@ -24,19 +24,25 @@ object GraftColumnBridge {
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  /** Drop the block-manager blocks behind a `localCheckpoint()`ed
-    * DataFrame (`LogicalRDD.rdd` is the persisted internal RDD;
-    * `df.rdd` would wrap it in a fresh conversion RDD whose unpersist
-    * is a no-op). After this the DataFrame is UNRECOMPUTABLE — only
-    * call once nothing downstream will read it again. Iterative
-    * algorithms need it: each round's checkpoint otherwise stays
-    * cached for the session's lifetime.
+  /** `rows` (`df`'s, persisted) as one `LogicalRDD` leaf with `df`'s
+    * output, partitioning and statistics, as `Dataset.checkpoint` builds.
     */
-  def unpersistCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+  def overRows(df: DataFrame,
+               rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
+    ofRows(df.sparkSession, org.apache.spark.sql.execution.LogicalRDD.fromDataset(
+      rows, df.asInstanceOf[classic.Dataset[_]], df.isStreaming))
+
+  /** `df` under an `InMemoryRelation` the CacheManager does not know: no
+    * other query is rewritten to read it, and its blocks go with it.
+    */
+  def inMemory(df: DataFrame, level: org.apache.spark.storage.StorageLevel): DataFrame =
+    ofRows(df.sparkSession, org.apache.spark.sql.execution.columnar.InMemoryRelation(
+      level, df.queryExecution, None))
+
+  /** The RDDs behind the `LogicalRDD` leaves ([[overRows]]) of `df`'s plan. */
+  def pinnedRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collect { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
+
   /** Idempotently add an extra planner strategy to a live session.
     * Synchronized: `extraStrategies` is a plain var, so a concurrent
     * check-then-append from two threads could lose one strategy.

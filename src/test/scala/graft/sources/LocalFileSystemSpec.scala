@@ -140,4 +140,18 @@ class LocalFileSystemSpec extends AnyFunSuite {
     try intercept[ChecksumException](in.readFully(new Array[Byte](4096)))
     finally in.close()
   }
+
+  test("a FileContext read checks the .crc of a file it wrote") {
+    // Spark reads streaming offsets, commits and state through FileContext
+    val fc = FileContext.getLocalFSFileContext(new Configuration())
+    val data = Files.createTempDirectory("graft-fc-crc").resolve("data")
+    val out = fc.create(new Path(data.toString), EnumSet.of(CreateFlag.CREATE))
+    out.write(Array.tabulate[Byte](4096)(_.toByte)); out.close()
+    val raf = new RandomAccessFile(data.toFile, "rw")
+    try { raf.seek(1000); val b = raf.read(); raf.seek(1000); raf.write(b ^ 0xff) }
+    finally raf.close()
+    val in = fc.open(new Path(data.toString))
+    try intercept[ChecksumException](in.readFully(new Array[Byte](4096)))
+    finally in.close()
+  }
 }
